@@ -157,3 +157,94 @@ def test_blockmax_pruning_misaligned_tail_blocks():
     a = topk_local(*score_term_topk_blockmax(node, ctx), 10)
     b = topk_local(*_eval_term(node, ctx, True), 10)
     assert [list(x) for x in a] == [list(x) for x in b]
+
+
+# ---- every serving path against the oracle, float32-exact -------------
+# The same 25 query strings run through search() and search_many() on the
+# driver-side (local) and the distributed executor, and through
+# search_many() on a searcher with tombstones. Expected: the oracle's
+# exhaustive scoring, minus deleted docs, ranked (score desc, doc_id asc);
+# scores must be equal as float32, not merely close.
+
+_QUERIES = make_query_set()
+_BATCH_K = 10
+
+
+def _fresh(reader, local: bool, deletes=None):
+    from lucene_spark.search import IndexSearcher
+
+    s = IndexSearcher(reader)
+    if deletes is not None:
+        s = s.with_deletes(deletes)
+    if not local:
+        s.local_topk_max_postings = 0
+        s.local_batch_max_postings = 0
+    return s
+
+
+def _oracle_ranked(oracle, node, k, deleted=frozenset()):
+    live = [(d, s) for d, s in oracle.eval(node).items() if d not in deleted]
+    live.sort(key=lambda kv: (-float(kv[1]), kv[0]))
+    return [(d, np.float32(s)) for d, s in live[:k]]
+
+
+def _assert_float32_equal(label, got, want):
+    assert [d for d, _ in got] == [d for d, _ in want], (
+        f"{label}: docs {got} != {want}")
+    for (d, s1), (_, s2) in zip(got, want):
+        assert np.float32(s1) == np.float32(s2), (
+            f"{label}: score {s1!r} != {s2!r} for doc {d}")
+
+
+@pytest.fixture(scope="module")
+def dist_searcher(reader):
+    return _fresh(reader, local=False)
+
+
+@pytest.mark.parametrize("qid,query,k", _QUERIES)
+def test_topk_parity_float32_local_and_distributed(searcher, dist_searcher,
+                                                   oracle, qid, query, k):
+    want = _oracle_ranked(oracle, searcher._plan(query), k)
+    for label, s in (("local", searcher), ("distributed", dist_searcher)):
+        _assert_float32_equal(f"search() {label} q{qid} {query!r}",
+                              run_engine(s, query, k), want)
+
+
+def _batch_rows(s, queries, k):
+    by_q: dict[str, list] = {}
+    for r in s.search_many(queries, k=k).collect():
+        by_q.setdefault(r["query_id"], []).append(
+            (int(r["rank"]), int(r["doc_id"]), float(r["score"])))
+    out = {}
+    for qid, rows in by_q.items():
+        rows.sort()
+        assert [r for r, _, _ in rows] == list(range(1, len(rows) + 1)), qid
+        out[qid] = [(d, sc) for _, d, sc in rows]
+    return out
+
+
+def _check_batch(s, oracle, plan_of, deleted=frozenset(), label=""):
+    queries = {f"q{qid}": q for qid, q, _ in _QUERIES}
+    got = _batch_rows(s, queries, _BATCH_K)
+    for qid, q in queries.items():
+        want = _oracle_ranked(oracle, plan_of(q), _BATCH_K, deleted)
+        _assert_float32_equal(f"search_many {label} {qid} {q!r}",
+                              got.get(qid, []), want)
+
+
+@pytest.mark.parametrize("local", [True, False], ids=["local", "distributed"])
+def test_search_many_parity_float32(reader, searcher, oracle, local):
+    _check_batch(_fresh(reader, local), oracle, searcher._plan,
+                 label="local" if local else "distributed")
+
+
+@pytest.mark.parametrize("local", [True, False], ids=["local", "distributed"])
+def test_search_many_parity_with_deletes(reader, searcher, oracle, local):
+    # tombstone the top hit of three queries: their next-best docs move
+    # up, and collection statistics still count the deleted docs
+    victims = set()
+    for q in ("index", "index OR writer", "license"):
+        victims.add(_oracle_ranked(oracle, searcher._plan(q), 1)[0][0])
+    s = _fresh(reader, local, deletes=sorted(victims))
+    _check_batch(s, oracle, searcher._plan, deleted=frozenset(victims),
+                 label="deletes " + ("local" if local else "distributed"))
