@@ -8718,9 +8718,28 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # driver-red first, then never-driver-sampled, then the green
     # regression tail. Do not hand-sort.
     return {
-        # --- driver-red (latest driver row failed) ---
-        "tx_logit": tx_logit,
         # --- never driver-sampled ---
+        "ft_cn_analyzer": ft_cn_analyzer,
+        "ft_ko_number": ft_ko_number,
+        "ft_ja_iteration": ft_ja_iteration,
+        "ft_ja_userdict": ft_ja_userdict,
+        "ft_ko_userdict": ft_ko_userdict,
+        "ft_ko_analyzer": ft_ko_analyzer,
+        "ft_hunspell": ft_hunspell,
+        "ft_kstem": ft_kstem,
+        "ft_hunspell_spell": ft_hunspell_spell,
+        "ft_path_hierarchy": ft_path_hierarchy,
+        "ft_decompound": ft_decompound,
+        "ft_pattern_capture": ft_pattern_capture,
+        "ft_misc_filters": ft_misc_filters,
+        "ft_opennlp": ft_opennlp,
+        "ft_decompound_hyph": ft_decompound_hyph,
+        "ft_wikipedia": ft_wikipedia,
+        "ft_classic": ft_classic,
+        "ft_html_strip_exact": ft_html_strip_exact,
+        "ft_custom_analyzer": ft_custom_analyzer,
+        # --- driver-green regression tail ---
+        "tx_logit": tx_logit,
         "sim_pq_topk": sim_pq_topk,
         "sim_l2_topk": sim_l2_topk,
         "rel_facet_assoc": rel_facet_assoc,
@@ -8762,7 +8781,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ft_cn_tokens": ft_cn_tokens,
         "rel_shape_contains": rel_shape_contains,
         "ft_th_tokens": ft_th_tokens,
-        # --- new round-5 gates (no driver evidence yet) ---
         "rel_shape_relate": rel_shape_relate,
         "ft_ja_large": ft_ja_large,
         "ft_ko_large": ft_ko_large,
@@ -8771,27 +8789,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ft_match_highlight": ft_match_highlight,
         "ft_ja_number": ft_ja_number,
         "ft_ja_analyzer": ft_ja_analyzer,
-        # --- local-evidence tail additions (outside the 50-window) ---
-        "ft_cn_analyzer": ft_cn_analyzer,
-        "ft_ko_number": ft_ko_number,
-        "ft_ja_iteration": ft_ja_iteration,
-        "ft_ja_userdict": ft_ja_userdict,
-        "ft_ko_userdict": ft_ko_userdict,
-        "ft_ko_analyzer": ft_ko_analyzer,
-        "ft_hunspell": ft_hunspell,
-        "ft_kstem": ft_kstem,
-        "ft_hunspell_spell": ft_hunspell_spell,
-        "ft_path_hierarchy": ft_path_hierarchy,
-        "ft_decompound": ft_decompound,
-        "ft_pattern_capture": ft_pattern_capture,
-        "ft_misc_filters": ft_misc_filters,
-        "ft_opennlp": ft_opennlp,
-        "ft_decompound_hyph": ft_decompound_hyph,
-        "ft_wikipedia": ft_wikipedia,
-        "ft_classic": ft_classic,
-        "ft_html_strip_exact": ft_html_strip_exact,
-        "ft_custom_analyzer": ft_custom_analyzer,
-        # --- driver-green regression tail ---
         "ft_common_terms": ft_common_terms,
         "ft_phrase_wildcard": ft_phrase_wildcard,
         "ft_blended_topk": ft_blended_topk,

@@ -433,6 +433,13 @@ class IndexBuilder:
           manifest.json           final commit (the segments_N analogue)
         """
         cfg = self.cfg
+        # a bad config fails before anything is written: vector graphs
+        # are built from docstats carry columns only after the publish
+        for vf in cfg.vector_graph_fields:
+            if vf not in cfg.carry_cols:
+                raise ValueError(
+                    f"vector_graph_fields entry {vf!r} must be a "
+                    "carry column")
         t0 = time.time()
         phases: dict[str, float] = {}
 
@@ -674,10 +681,6 @@ class IndexBuilder:
 
             r = IndexReader(self.spark, index_dir)
             for vf in cfg.vector_graph_fields:
-                if vf not in cfg.carry_cols:
-                    raise ValueError(
-                        f"vector_graph_fields entry {vf!r} must be a "
-                        "carry column")
                 build_vector_graphs(r, vf)
         return manifest
 

@@ -1152,7 +1152,6 @@ def _eval_term(node: P.TermNode, ctx: EvalContext, need_scores: bool) -> tuple[n
 
 def score_term_topk_blockmax(
     node: P.TermNode, ctx: EvalContext,
-    phase1_only: bool = False, initial_floor: float = -np.inf,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Single-term top-k with block-max skipping (ImpactsDISI analogue,
     search/ImpactsDISI.java:99-131). Two-phase:
@@ -1161,14 +1160,7 @@ def score_term_topk_blockmax(
          (the minCompetitiveScore of TopScoreDocCollector.java:84-98)
       2. additionally score every other block whose upper bound is NOT
          strictly below the floor
-    Result-identical to exhaustive scoring (strict < keeps ties alive).
-
-    phase1_only: return just phase 1's candidates (the cheap sampling
-    pass of a two-pass global-floor search). initial_floor: a floor from
-    OUTSIDE this partition — the MaxScoreAccumulator role
-    (search/MaxScoreAccumulator.java:24): any true score of a real doc
-    elsewhere is an admissible floor here, so cross-partition pruning
-    stays result-identical."""
+    Result-identical to exhaustive scoring (strict < keeps ties alive)."""
     tp = ctx.postings.get((node.field, node.term))
     if tp is None:
         return _empty()
@@ -1203,13 +1195,10 @@ def score_term_topk_blockmax(
     phase1 = order[:take]
     sel = _block_mask(phase1, off, n)
     s1 = sim.score(tp.tfs[sel], tp.dls[sel], w, avgdl)
-    if phase1_only:
-        return tp.docs[sel], s1
     if s1.size >= k:
         floor = np.partition(s1, s1.size - k)[s1.size - k]
     else:
         floor = -np.inf
-    floor = max(floor, initial_floor)
     rest = order[take:]
     rest = rest[bmax[rest] >= floor]  # strict-< pruning: keep ties
     if rest.size:

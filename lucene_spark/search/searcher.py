@@ -9,13 +9,18 @@ Query lifecycle (mirrors SURVEY.md §3.2):
    1024 per IndexSearcher.java:83)
 4. weight creation (driver)  — df/cf lookups from termdict; BM25 weights
    precomputed (Similarity.scorer, BM25Similarity.java:202-216)
-5. per-partition execution   — bucket-pruned postings scan → one
-   applyInPandas group per index partition runs the vectorized kernel and
-   emits ≤k local candidates (the LeafSlice loop of IndexSearcher.java:310-356;
-   per-partition top-k = partition-local minCompetitiveScore pruning)
-6. reduce                    — global orderBy(score desc, doc_id asc).limit(k)
-   = TopDocs.merge (search/TopDocs.java:202-227; our doc_id embeds
-   (partition, local) so the tie order equals Lucene's shard/doc order)
+5. execution                 — ONE executor (IndexSearcher._execute) for
+   search/search_after/count/matches/search_many; a single query is the
+   batch of one. Under the Σdf budget the bucket-pruned posting rows are
+   collected once and the vectorized kernel runs driver-side; above it,
+   one mapInPandas task per part_id partition runs the same kernel and
+   emits ≤k local candidates per query (the LeafSlice loop of
+   IndexSearcher.java:310-356; per-partition top-k = partition-local
+   minCompetitiveScore pruning)
+6. reduce (distributed path) — global orderBy(score desc, doc_id asc).limit(k),
+   or a per-query window for batches = TopDocs.merge
+   (search/TopDocs.java:202-227; our doc_id embeds (partition, local) so
+   the tie order equals Lucene's shard/doc order)
 
 Scale notes: step 5's shuffle moves only (terms × partitions) posting rows
 — partition-pruned by term bucket at the scan; step 6 sorts ≤ k×P tiny
@@ -26,10 +31,11 @@ handler/component/QueryComponent.java:554-562).
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
 from collections import OrderedDict
-from dataclasses import replace
+from dataclasses import dataclass, replace
 
 import numpy as np
 import pandas as pd
@@ -150,8 +156,6 @@ class DeleteSet:
 
     def digest(self) -> str:
         if self._digest is None:
-            import hashlib
-
             h = hashlib.blake2b(digest_size=8)
             h.update(self.ids.tobytes())
             if self.containers:
@@ -297,8 +301,6 @@ def _assemble_postings_cached(
     locking needed."""
     if epoch is None or not len(pdf) or _asm_cache_budget() <= 0:
         return _assemble_postings(pdf, want_pos, deleted, block_size)
-    import hashlib
-
     pdf = pdf.sort_values(["field", "term", "part_id", "slice"],
                           ignore_index=True)
     groups = pdf.groupby(["field", "term"], sort=False).indices
@@ -487,6 +489,132 @@ def _assemble_postings(pdf: pd.DataFrame, want_pos: bool, deleted: np.ndarray,
                                                pos=pos, block_off=block_off,
                                                pay=pay)
     return postings
+
+
+_HITS_SCHEMA = "query_id string, doc_id long, score float"
+_BATCH_SCHEMA = "query_id string, doc_id long, score float, rank int"
+
+
+@dataclass
+class _Scoring:
+    """Driver-computed scoring inputs shared by every query of one
+    executor call (Similarity.scorer creation). Picklable: it rides the
+    mapInPandas closure to the workers."""
+    weights: dict
+    syn_weights: dict
+    phrase_weights: dict
+    blend_weights: dict
+    avgdl: dict
+    sim: object
+    field_sims: dict
+    block_size: int
+
+
+def _hits_frame(qids: list, counts: list, docs: list, scores: list) -> pd.DataFrame:
+    """(query_id, doc_id, score) from per-query arrays — ONE frame via
+    np.repeat over the hit counts (a pd.DataFrame per query would cost
+    more than the scoring itself on large batches)."""
+    if not docs:
+        return pd.DataFrame({"query_id": pd.Series([], dtype=object),
+                             "doc_id": pd.Series([], dtype=np.int64),
+                             "score": pd.Series([], dtype=np.float32)})
+    return pd.DataFrame({
+        "query_id": np.repeat(np.asarray(qids, dtype=object),
+                              np.asarray(counts, dtype=np.int64)),
+        "doc_id": np.concatenate(docs).astype(np.int64),
+        "score": np.concatenate(scores).astype(np.float32)})
+
+
+def _score_plans(plans: dict[str, P.Node], postings: dict, sc: _Scoring,
+                 k: int | None, need_scores: bool = True,
+                 after: tuple[float, int] | None = None) -> pd.DataFrame:
+    """The one scoring dispatch of the serving path: it runs on the
+    driver (local path) or inside mapInPandas (distributed path) over
+    the same assembled postings. Per query: a single-term top-k goes
+    through block-max pruning — valid for page 1 only, since a
+    searchAfter cursor needs the docs BELOW the floor — and everything
+    else evaluates exhaustively; then the searchAfter cursor filter
+    (strictly after (score, doc_id)) and, when k is set, the partition-
+    local top-k. Each query's rows come out contiguous, ranked (score
+    desc, doc_id asc) when k is set."""
+    ctx = EvalContext(postings=postings, weights=sc.weights,
+                      syn_weights=sc.syn_weights, avgdl=sc.avgdl, sim=sc.sim,
+                      k=k or 10, phrase_weights=sc.phrase_weights,
+                      field_sims=sc.field_sims, block_size=sc.block_size,
+                      score_memo={}, blend_weights=sc.blend_weights)
+    qids: list[str] = []
+    counts: list[int] = []
+    doc_parts: list[np.ndarray] = []
+    score_parts: list[np.ndarray] = []
+    for qid, node in plans.items():
+        if k is not None and after is None and isinstance(node, P.TermNode):
+            docs, scores = score_term_topk_blockmax(node, ctx)
+        else:
+            docs, scores = eval_node(node, ctx, need_scores=need_scores)
+        if after is not None and docs.size:
+            a_s, a_d = np.float32(after[0]), np.int64(after[1])
+            keep = (scores < a_s) | ((scores == a_s) & (docs > a_d))
+            docs, scores = docs[keep], scores[keep]
+        if k is not None:
+            docs, scores = topk_local(docs, scores, k)
+        if docs.size:
+            qids.append(qid)
+            counts.append(docs.size)
+            doc_parts.append(docs)
+            score_parts.append(scores)
+    return _hits_frame(qids, counts, doc_parts, score_parts)
+
+
+def _kernel_task(plans: dict[str, P.Node], sc: _Scoring, k: int | None,
+                 need_scores: bool, after: tuple[float, int] | None,
+                 want_pos: bool, deleted: DeleteSet, epoch: str,
+                 terms_key: str):
+    """The distributed runner: a mapInPandas function running
+    _score_plans once over a whole task partition — part_id hash
+    partitioning guarantees every part's rows are complete there, and
+    _assemble_postings concatenates across parts exactly as the local
+    path does.
+
+    Whole-partition cache first: within (epoch, term set) a shuffle
+    partition's content is deterministic, so a hit skips assembly
+    (sort/groupby/digest/decode); the input batches still deserialize on
+    the drain — see _PART_CACHE. On a miss, assembly goes through the
+    PER-TERM cache, so a request whose term set merely OVERLAPS a
+    previous one still reuses every unchanged term's decode. Entries the
+    term cache stored come back memory-OWNED, so the partition-cache copy
+    shares them instead of duplicating."""
+
+    def run_stream(batches):
+        from pyspark import TaskContext
+
+        tc = TaskContext.get()
+        key = (None if tc is None else
+               (epoch, terms_key, want_pos, sc.block_size, tc.partitionId()))
+        cached = _parts_cache_get(key) if key is not None else None
+        if cached is not None:
+            for _ in batches:
+                # drain WITHOUT using the frames: a python worker is
+                # returned to the reuse pool only after reading its input
+                # to EOF — skipping the drain would kill the worker after
+                # the task and lose this very cache
+                pass
+            if cached:
+                yield _score_plans(plans, cached, sc, k, need_scores, after)
+            return
+        chunks = [pdf for pdf in batches if len(pdf)]
+        if not chunks:
+            if key is not None:
+                _parts_cache_put(key, {})
+            return
+        postings = _assemble_postings_cached(
+            pd.concat(chunks, ignore_index=True), want_pos, deleted,
+            sc.block_size, epoch)
+        if key is not None:
+            _parts_cache_put(
+                key, {ft: _tp_owned(tp) for ft, tp in postings.items()})
+        yield _score_plans(plans, postings, sc, k, need_scores, after)
+
+    return run_stream
 
 
 class IndexSearcher:
@@ -730,21 +858,22 @@ class IndexSearcher:
         return parse_query(query, self.analyzer,
                            field_analyzers=self.field_analyzers)
 
-    def search(self, query: str | P.Node, k: int | None = None,
-               two_pass: bool = False) -> DataFrame:
+    def search(self, query: str | P.Node, k: int | None = None) -> DataFrame:
         """Top-k → DataFrame(doc_id long, score float) ordered by
         (score desc, doc_id asc), exactly k rows or fewer. `k=None`
         defaults to 10 — except a KnnVectorNode carries its own k (the
         parser's k= attribute), which an explicit argument overrides.
 
-        two_pass=True (term queries): first a cheap pass scores only the
-        best-upper-bound blocks per partition, and the global kth-best of
-        those REAL scores is broadcast as the pruning floor for the full
-        pass — the batch analogue of MaxScoreAccumulator sharing
-        minCompetitiveScore across slices (IndexSearcher.java:490-491).
-        Result-identical (any real doc score with ≥k docs above it is an
-        admissible floor); pays one extra tiny job, saves block scoring
-        when partitions are many and posting lists long."""
+        A query is the batch of one: it runs through the same executor
+        as search_many() (see _execute), with the local path gated on
+        `local_topk_max_postings`. On the local path the result frame is
+        built from the kernel's ranked arrays, with no further Spark job;
+        on the distributed path the per-partition candidates are reduced
+        by one orderBy(score desc, doc_id asc).limit(k), which Spark
+        plans as TakeOrderedAndProject (= TopDocs.merge). Two thin steps
+        sit around the executor: a KnnVectorNode dispatches to the
+        vector-field searcher before it, and doc-values filters are
+        semi-joined onto all matches after it."""
         node = self._plan(query)
         if isinstance(node, P.MatchNoneNode):
             return self._empty_result()
@@ -768,28 +897,27 @@ class IndexSearcher:
         if dv:
             m = self._apply_dv_filters(self._matches(node, need_scores=True), dv)
             return m.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-        floor = float("-inf")
-        if two_pass and isinstance(node, P.TermNode):
-            pre = self._run_kernel(node, k, need_scores=True, phase1_only=True)
-            rows = pre.orderBy(F.col("score").desc()).limit(k).collect()
-            if len(rows) == k:
-                floor = float(rows[-1]["score"])
-        cand = self._run_kernel(node, k, need_scores=True, initial_floor=floor)
-        return cand.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+        return self._topk(node, k)
 
     def search_many(self, queries: dict[str, str | P.Node], k: int = 10) -> DataFrame:
-        """Batched top-k for a whole query set in ONE Spark job —
+        """Batched top-k for a whole query set —
         (query_id, doc_id, score, rank), ranks 1..k per query, identical
         per-query results to search().
 
         This is the Spark-native answer to query throughput: the
         reference amortizes per-query cost across threads
         (micro-standard.alg runs 5000 searches per round); a per-query
-        Spark job pays ~1s scheduling floor, so batch serving amortizes
-        it instead — one bucket-pruned postings scan for the UNION of all
-        query terms, every query evaluated vectorized per partition, one
-        global windowed top-k. Queries with no matching terms simply
-        produce no rows.
+        Spark job pays a scheduling floor, so batch serving amortizes it
+        instead. The batch's distinct queries go through the one
+        executor (_execute) together — search() is its batch of one: one
+        term-stats lookup and one postings read for the UNION of all
+        query terms, every query evaluated by the same vectorized kernel.
+        When the union Σdf fits `local_batch_max_postings` the whole
+        batch is answered driver-side from one shuffle-free collect
+        (memoized per term set); otherwise the kernel runs per partition
+        in one mapInPandas stage and one windowed top-k merges the
+        candidates. Queries with no matching terms simply produce no
+        rows.
 
         Every call builds a FRESH DataFrame, so evaluation genuinely
         re-runs per batch (returning a memoized DataFrame would let Spark
@@ -797,8 +925,10 @@ class IndexSearcher:
         scoring stages entirely — a result cache masquerading as
         serving). What IS reused across batches: parsed plans and weight
         trees per query string (_plan_cache/_weights_memo), term-stats
-        lookups, the shuffled+persisted candidate postings per term set
-        (_post_cache), and the workers' decoded-postings caches."""
+        lookups, the driver-side assembled postings and the
+        shuffled+persisted candidate postings per term set
+        (_local_rows_cache/_post_cache), and the workers' decoded-
+        postings caches."""
         plans: dict[str, P.Node] = {}
         # plan each DISTINCT query string once, and plan them CONCURRENTLY:
         # planning can pay dictionary-expansion collect jobs (prefix/fuzzy/
@@ -851,265 +981,49 @@ class IndexSearcher:
                     "search_many batches (use search()/matches())")
             if not isinstance(node, P.MatchNoneNode):
                 plans[qid] = node
-        if not plans:
-            return self.reader.spark.createDataFrame(
-                [], "query_id string, doc_id long, score float, rank int")
 
         # EVALUATION dedup (not just plan dedup): query_ids that share a
         # query string share ONE kernel evaluation under a representative
-        # query_id; results fan out afterwards via a broadcast mapping
-        # join. This is the queryResultCache role (solr/core/.../search/
-        # SolrIndexSearcher's queryResultCache) inside a single batch —
-        # production batches repeat hot queries, and scoring them once is
-        # the whole point of batching. Identity mapping skips the join.
+        # query_id; results fan out afterwards. This is the
+        # queryResultCache role (solr/core/.../search/SolrIndexSearcher's
+        # queryResultCache) inside a single batch — production batches
+        # repeat hot queries, and scoring them once is the whole point of
+        # batching. Identity mapping skips the fan-out.
         rep_of: dict[str, str] = {}     # query string -> representative qid
         eval_key: dict[str, str] = {}   # qid -> representative qid
-        for qid, q in queries.items():
-            if qid not in plans:
-                continue
+        for qid, node in plans.items():
+            q = queries[qid]
             eval_key[qid] = rep_of.setdefault(q, qid) if isinstance(q, str) else qid
-
-        # per-batch driver work runs over the DEDUPED node set only, and
-        # term collection + weight trees are memoized per query string
-        # across batches (the TermStates-cache role: stats are pinned to
-        # the immutable reader snapshot, so weights never go stale)
-        uniq = {ek: plans[ek] for ek in set(eval_key.values())}
-        all_terms: set[tuple[str, str]] = set()
-        for n in uniq.values():
-            self._collect_terms(n, all_terms)
-        stats = self.reader.term_stats(sorted(all_terms))
-        live = [t for t in all_terms if t in stats]
-        weights: dict = {}
-        syn_w: dict = {}
-        phrase_w: dict = {}
-        blend_w: dict = {}
-        for ek, n in uniq.items():
-            q = queries[ek]
-            memo_key = q if isinstance(q, str) else None
-            wsp = self._weights_memo.get(memo_key) if memo_key else None
-            if wsp is None:
-                wsp = self._weights(n, stats)
-                if memo_key is not None:
-                    self._weights_memo[memo_key] = wsp
-            w, s, p, bl = wsp
-            weights.update(w)
-            syn_w.update(s)
-            phrase_w.update(p)
-            blend_w.update(bl)
-        avgdl = self._avgdl_map({f for f, _ in all_terms})
-        sim = self.sim
-        field_sims = self.field_sims
-        kk = k
-        want_pos = any(self._check_positions(n) for n in plans.values())
-        deleted = self._deleted
-        block_size = int(self.reader.manifest["config"].get("block_size", 128))
-        has_matchall = any(isinstance(n, P.MatchAllNode) for n in plans.values())
-        kernel_plans = {ek: plans[ek] for ek in set(eval_key.values())
-                        if not isinstance(plans[ek], P.MatchAllNode)}
-
-        # ---- cost-based LOCAL batch execution (same admissibility as
-        # search()'s local top-k path): when the batch's Σdf fits the
-        # local budget, ONE shuffle-free postings collect + the driver-
-        # side kernel replaces the whole 2-stage distributed job — for a
-        # small batch (the per-query latency case) the distributed path
-        # is ~90% scheduling floor. Result-identical: same kernel, same
-        # concatenated-global-doc-order arrays. The collected rows are
-        # memoized per (epoch, term set) under the same Σdf budget
-        # (bounded LRU) — the serving analogue of the worker-side decoded
-        # cache, so repeated small batches skip even the collect job.
-        # Big batches (union Σdf over budget) take the distributed path
-        # unchanged — the scaling criterion's 12k-instance batches do.
-        est_batch = sum(df for df, _ in stats.values())
-        if (live and kernel_plans and not has_matchall
-                and 0 < est_batch <= self.local_batch_max_postings
-                and self.local_topk_max_postings > 0):
-            ctx = self._local_batch_ctx(live, want_pos, block_size,
-                                        weights, syn_w, phrase_w, blend_w,
-                                        avgdl, kk)
-            out = []
-            if ctx is not None:
-                for ek, node in kernel_plans.items():
-                    if isinstance(node, P.TermNode):
-                        docs, scores = score_term_topk_blockmax(node, ctx)
-                    else:
-                        docs, scores = eval_node(node, ctx, need_scores=True)
-                    docs, scores = topk_local(docs, scores, kk)
-                    out.append((ek, docs, scores))
-            by_ek = {ek: (docs, scores) for ek, docs, scores in out}
-            qids, docs_l, scores_l, ranks_l = [], [], [], []
-            for qid, ek in eval_key.items():
-                hit = by_ek.get(ek)
-                if hit is None or not hit[0].size:
-                    continue
-                docs, scores = hit
-                qids.extend([qid] * docs.size)
-                docs_l.append(docs)
-                scores_l.append(scores)
-                ranks_l.append(np.arange(1, docs.size + 1, dtype=np.int32))
-            if not qids:
-                return self.reader.spark.createDataFrame(
-                    [], "query_id string, doc_id long, score float, rank int")
-            res_pdf = pd.DataFrame({
-                "query_id": qids,
-                "doc_id": np.concatenate(docs_l).astype(np.int64),
-                "score": np.concatenate(scores_l).astype(np.float32),
-                "rank": np.concatenate(ranks_l).astype(np.int32),
-            })
-            return self.reader.spark.createDataFrame(
-                res_pdf, "query_id string, doc_id long, score float, rank int")
-
-        out_schema = "query_id string, doc_id long, score float"
-        cand = None
-        if live and kernel_plans:
-            asm_epoch = self._asm_epoch()
-            terms_key = None
-            if asm_epoch is not None:
-                import hashlib as _hl
-                h = _hl.blake2b(digest_size=12)
-                h.update(asm_epoch.encode())
-                nparts = (self.reader.postings_partitions
-                          if self.reader.postings_cached
-                          else self.kernel_partitions)
-                h.update(f"|{nparts}|".encode())
-                for f_t in sorted(live):
-                    h.update(repr(f_t).encode())
-                terms_key = h.hexdigest()
-
-            post = None
-            if terms_key is not None and not self.reader.postings_cached:
-                post = self._post_cache.get(terms_key)
-                if post is not None:
-                    self._post_cache.move_to_end(terms_key)
-            if post is None:
-                post = self.reader.postings_for_terms(live)
-                if not self.reader.postings_cached:
-                    # cached postings are already partitioned by part_id;
-                    # the parquet path needs the explicit fixed-width
-                    # shuffle. Keep the shuffled candidate rows persisted
-                    # per term set: a serving process re-sees the same
-                    # query mixes, and re-shuffling an immutable snapshot
-                    # per batch is pure waste (the IndexReader-stays-open
-                    # role). Bounded LRU; evicted entries unpersist.
-                    post = post.repartition(self.kernel_partitions,
-                                            "part_id").persist()
-                    if terms_key is not None:
-                        self._post_cache[terms_key] = post
-                        while len(self._post_cache) > 4:
-                            _, old = self._post_cache.popitem(last=False)
-                            try:
-                                old.unpersist()
-                            except Exception:
-                                pass
-
-            def run_with(postings: dict) -> pd.DataFrame:
-                ctx = EvalContext(postings=postings, weights=weights,
-                                  syn_weights=syn_w, avgdl=avgdl, sim=sim,
-                                  k=kk, phrase_weights=phrase_w,
-                                  field_sims=field_sims, block_size=block_size,
-                                  score_memo={}, blend_weights=blend_w)
-                # ONE output frame per task (np.repeat over per-query hit
-                # counts) — a pd.DataFrame per query would cost more than
-                # the scoring itself on large batches
-                qids: list[str] = []
-                counts: list[int] = []
-                doc_parts: list[np.ndarray] = []
-                score_parts: list[np.ndarray] = []
-                for qid, node in kernel_plans.items():
-                    if isinstance(node, P.TermNode):
-                        docs, scores = score_term_topk_blockmax(node, ctx)
-                    else:
-                        docs, scores = eval_node(node, ctx, need_scores=True)
-                    docs, scores = topk_local(docs, scores, kk)
-                    if docs.size:
-                        qids.append(qid)
-                        counts.append(docs.size)
-                        doc_parts.append(docs)
-                        score_parts.append(scores)
-                if not doc_parts:
-                    return pd.DataFrame({"query_id": pd.Series([], dtype=str),
-                                         "doc_id": pd.Series([], dtype=np.int64),
-                                         "score": pd.Series([], dtype=np.float32)})
-                qid_col = np.repeat(np.asarray(qids, dtype=object),
-                                    np.asarray(counts, dtype=np.int64))
-                return pd.DataFrame({
-                    "query_id": qid_col,
-                    "doc_id": np.concatenate(doc_parts).astype(np.int64),
-                    "score": np.concatenate(score_parts).astype(np.float32)})
-
-            def run_stream(batches):
-                # one kernel invocation over the whole task partition —
-                # part_id hash partitioning guarantees every part's rows
-                # are complete here, and _assemble_postings concatenates
-                # across parts exactly as the local path does.
-                # Whole-partition cache first: within (epoch, term set),
-                # this shuffle partition's content is deterministic, so a
-                # hit skips assembly (sort/groupby/digest/decode); the
-                # input batches still deserialize on the drain below —
-                # see _PART_CACHE.
-                key = None
-                if terms_key is not None:
-                    from pyspark import TaskContext
-                    tc = TaskContext.get()
-                    if tc is not None:
-                        key = (asm_epoch, terms_key, want_pos, block_size,
-                               tc.partitionId())
-                        cached = _parts_cache_get(key)
-                        if cached is not None:
-                            for _ in batches:
-                                # drain WITHOUT using the frames: a python
-                                # worker is returned to the reuse pool only
-                                # after reading its input to EOF — skipping
-                                # the drain would kill the worker after the
-                                # task and lose this very cache
-                                pass
-                            if cached:
-                                yield run_with(cached)
-                            return
-                chunks = [pdf for pdf in batches if len(pdf)]
-                if not chunks:
-                    if key is not None:
-                        _parts_cache_put(key, {})
-                    return
-                # part-cache miss: assemble through the PER-TERM cache,
-                # so a batch whose term set merely OVERLAPS a previous
-                # one still reuses every unchanged term's decode (a
-                # varying query stream would otherwise re-decode all
-                # terms on every pass). Entries the term cache stored
-                # come back memory-OWNED, so the partition-cache copy
-                # below shares them instead of duplicating.
-                postings = _assemble_postings_cached(
-                    pd.concat(chunks, ignore_index=True), want_pos, deleted,
-                    block_size, asm_epoch)
-                if key is not None:
-                    _parts_cache_put(
-                        key, {ft: _tp_owned(tp) for ft, tp in postings.items()})
-                yield run_with(postings)
-
-            cand = post.mapInPandas(run_stream, out_schema)
-            if any(q != ek for q, ek in eval_key.items()):
-                fan = self.reader.spark.createDataFrame(
-                    [(q, ek) for q, ek in eval_key.items()
-                     if ek in kernel_plans],
-                    "query_id string, eval_key string")
-                cand = (cand.withColumnRenamed("query_id", "eval_key")
-                        .join(F.broadcast(fan), "eval_key")
-                        .select("query_id", "doc_id", "score"))
-        if has_matchall:
-            ma = [q for q, n in plans.items() if isinstance(n, P.MatchAllNode)]
-            base = self._mask_deleted(self.reader.docstats().select("doc_id"))
-            for qid in ma:
-                boost = float(plans[qid].boost)
-                m = base.select(F.lit(qid).alias("query_id"), "doc_id",
-                                F.lit(boost).cast("float").alias("score"))
-                cand = m if cand is None else cand.unionByName(m)
-        if cand is None:
-            return self.reader.spark.createDataFrame(
-                [], "query_id string, doc_id long, score float, rank int")
+        uniq = {ek: plans[ek] for ek in dict.fromkeys(eval_key.values())}
+        # weight trees are memoized per query string across batches (the
+        # TermStates-cache role: stats are pinned to the immutable reader
+        # snapshot, so weights never go stale)
+        memo_keys = {ek: queries[ek] for ek in uniq
+                     if isinstance(queries[ek], str)}
+        budget = (self.local_batch_max_postings
+                  if self.local_topk_max_postings > 0 else 0)
+        res = self._execute(uniq, k, budget, memo_keys=memo_keys)
+        fanned = any(qid != ek for qid, ek in eval_key.items())
+        if isinstance(res, pd.DataFrame):
+            res["rank"] = (res.groupby("query_id", sort=False).cumcount()
+                           + 1).astype(np.int32)
+            if fanned:
+                fan = pd.DataFrame({"query_id": list(eval_key),
+                                    "eval_key": list(eval_key.values())})
+                res = fan.merge(res.rename(columns={"query_id": "eval_key"}),
+                                on="eval_key").drop(columns="eval_key")
+            return self._frame(res, _BATCH_SCHEMA)
+        if fanned:
+            fan = self.reader.spark.createDataFrame(
+                list(eval_key.items()), "query_id string, eval_key string")
+            res = (res.withColumnRenamed("query_id", "eval_key")
+                   .join(F.broadcast(fan), "eval_key")
+                   .select("query_id", "doc_id", "score"))
         from pyspark.sql import Window
 
         w = Window.partitionBy("query_id").orderBy(
             F.col("score").desc(), F.col("doc_id").asc())
-        return (cand.withColumn("rank", F.row_number().over(w))
+        return (res.withColumn("rank", F.row_number().over(w))
                 .filter(F.col("rank") <= k))
 
     def search_after(self, query: str | P.Node, k: int, after_score: float, after_doc: int) -> DataFrame:
@@ -1119,11 +1033,7 @@ class IndexSearcher:
         node = self._plan(query)
         if isinstance(node, P.MatchNoneNode):
             return self._empty_result()
-        cand = self._candidates(node, k, after=(after_score, after_doc))
-        cond = (F.col("score") < F.lit(float(after_score))) | (
-            (F.col("score") == F.lit(float(after_score))) & (F.col("doc_id") > F.lit(int(after_doc)))
-        )
-        return cand.filter(cond).orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+        return self._topk(node, k, after=(after_score, after_doc))
 
     def count(self, query: str | P.Node) -> int:
         """Exact hit count (TotalHitCountCollector analogue).
@@ -1133,7 +1043,9 @@ class IndexSearcher:
         maxDoc when the segment has no deletions (search/TermQuery.java
         Weight#count, search/MatchAllDocsQuery.java) — no postings are
         touched. Same here: termdict df / manifest doc_count are already
-        driver-side stats, so these counts cost zero Spark jobs."""
+        driver-side stats, so these counts cost zero Spark jobs. Any
+        other shape is a scoreless, uncapped run of the executor, local
+        under `local_topk_max_postings`."""
         node = self._plan(query)
         if isinstance(node, P.MatchNoneNode):
             return 0
@@ -1147,11 +1059,9 @@ class IndexSearcher:
             if isinstance(node, P.TermNode):
                 stats = self.reader.term_stats([(node.field, node.term)])
                 return int(stats.get((node.field, node.term), (0, 0))[0])
-        lc = self._local_count(node)
-        if lc is not None:
-            return lc
-        df = self._matches(node, need_scores=False)
-        return df.count()
+        res = self._execute({"": node}, None, self.local_topk_max_postings,
+                            need_scores=False)
+        return len(res) if isinstance(res, pd.DataFrame) else res.count()
 
     @staticmethod
     def _contains_matchall(node: P.Node) -> bool:
@@ -1166,99 +1076,6 @@ class IndexSearcher:
         if isinstance(node, P.ConstantScoreNode) and node.child is not None:
             return IndexSearcher._contains_matchall(node.child)
         return False
-
-    def _local_count(self, node: P.Node) -> int | None:
-        """Cost-based local count for selective boolean/phrase queries:
-        when Σdf fits the local-execution budget, one shuffle-free
-        postings collect + the driver-side kernel beats the distributed
-        applyInPandas → df.count() job chain (same admissibility argument
-        as the local top-k path; deletes are masked in
-        _assemble_postings). Returns None to fall back."""
-        if self._contains_matchall(node):
-            return None            # needs the doc universe, not postings
-        terms: set[tuple[str, str]] = set()
-        self._collect_terms(node, terms)
-        if not terms:
-            return None
-        stats = self.reader.term_stats(sorted(terms))
-        live = [t for t in terms if t in stats]
-        if not live:
-            return 0
-        if sum(df for df, _ in stats.values()) > self.local_topk_max_postings:
-            return None
-        ctx = self._local_ctx(node, stats, live, k=1)
-        if ctx is None:
-            return 0
-        docs, _ = eval_node(node, ctx, need_scores=False)
-        return int(docs.size)
-
-    def _local_ctx(self, node: P.Node, stats: dict, live: list,
-                   k: int) -> "EvalContext | None":
-        """One shuffle-free collect of the bucket-pruned posting rows and
-        a driver-side EvalContext — the shared engine of the local top-k
-        and local count paths (keep them in lockstep: delete masking,
-        block_size and weight wiring live only here). None = no rows."""
-        pdf = self.reader.postings_for_terms(live).toPandas()
-        if not len(pdf):
-            return None
-        bs = int(self.reader.manifest["config"].get("block_size", 128))
-        # assemble through the per-term cache (the driver runs the same
-        # _ASM_CACHE the executors use): a batch or later query whose
-        # term set overlaps this one reuses every unchanged term's decode
-        postings = _assemble_postings_cached(
-            pdf, self._check_positions(node), self._deleted, bs,
-            self._asm_epoch())
-        weights, syn_w, phrase_w, blend_w = self._weights(node, stats)
-        return EvalContext(postings=postings, weights=weights,
-                           syn_weights=syn_w,
-                           avgdl=self._avgdl_map({f for f, _ in stats}),
-                           sim=self.sim, k=k, phrase_weights=phrase_w,
-                           field_sims=self.field_sims, block_size=bs,
-                           score_memo={}, blend_weights=blend_w)
-
-    def _local_batch_ctx(self, live, want_pos: bool, block_size: int,
-                         weights, syn_w, phrase_w, blend_w, avgdl, k):
-        """Driver-side EvalContext over a batch's full term set —
-        search_many's local-path engine (see the cost gate there). The
-        ASSEMBLED postings are memoized per (asm epoch incl. delete
-        digest, want_pos, sorted term set) in a bounded LRU, so a serving
-        process answering recurring small batches pays the collect job
-        once per term-set/snapshot — the driver-side twin of the workers'
-        decoded-postings cache. Returns None when no posting rows
-        exist."""
-        key = None
-        epoch = self._asm_epoch()
-        if epoch is not None:
-            import hashlib
-
-            h = hashlib.blake2b(digest_size=12)
-            h.update(epoch.encode())
-            h.update(b"|local|")
-            h.update(str(bool(want_pos)).encode())
-            for ft in sorted(live):
-                h.update(repr(ft).encode())
-            key = h.hexdigest()
-        postings = None
-        if key is not None and key in self._local_rows_cache:
-            postings = self._local_rows_cache[key]
-            self._local_rows_cache.move_to_end(key)
-        if postings is None:
-            pdf = self.reader.postings_for_terms(live).toPandas()
-            if not len(pdf):
-                return None
-            # per-term cache reuse: single-query local paths and earlier
-            # batches have usually decoded the hot terms already
-            postings = _assemble_postings_cached(
-                pdf, want_pos, self._deleted, block_size, epoch)
-            if key is not None:
-                self._local_rows_cache[key] = postings
-                while len(self._local_rows_cache) > 4:
-                    self._local_rows_cache.popitem(last=False)
-        return EvalContext(postings=postings, weights=weights,
-                           syn_weights=syn_w, avgdl=avgdl, sim=self.sim,
-                           k=k, phrase_weights=phrase_w,
-                           field_sims=self.field_sims, block_size=block_size,
-                           score_memo={}, blend_weights=blend_w)
 
     def matches(self, query: str | P.Node, with_scores: bool = True) -> DataFrame:
         """ALL matching (doc_id, score) rows — the exhaustive collector path
@@ -1999,138 +1816,231 @@ class IndexSearcher:
     def _empty_result(self) -> DataFrame:
         return self.reader.spark.createDataFrame([], "doc_id long, score float")
 
-    def _run_kernel(self, node: P.Node, k: int | None, need_scores: bool,
-                    after: tuple[float, int] | None = None,
-                    phase1_only: bool = False,
-                    initial_floor: float = float("-inf")) -> DataFrame:
+    def _frame(self, pdf: pd.DataFrame, schema: str) -> DataFrame:
+        """A driver-side result as a DataFrame — no Spark job to build."""
+        if not len(pdf):
+            return self.reader.spark.createDataFrame([], schema)
+        return self.reader.spark.createDataFrame(pdf, schema)
+
+    def _topk(self, node: P.Node, k: int,
+              after: tuple[float, int] | None = None) -> DataFrame:
+        """search()/search_after() as a batch of one."""
+        res = self._execute({"": node}, k, self.local_topk_max_postings,
+                            after=after)
+        if isinstance(res, pd.DataFrame):
+            return self._frame(res[["doc_id", "score"]],
+                               "doc_id long, score float")
+        cand = res.select("doc_id", "score")
+        if after is not None:
+            # kernel rows are already past the cursor; match-all rows
+            # (served from docstats) are not
+            a_s, a_d = float(after[0]), int(after[1])
+            cand = cand.filter((F.col("score") < F.lit(a_s)) | (
+                (F.col("score") == F.lit(a_s)) & (F.col("doc_id") > F.lit(a_d))))
+        return cand.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+
+    def _matches(self, node: P.Node, need_scores: bool) -> DataFrame:
+        """Every match as a lazily evaluated (doc_id, score) DataFrame:
+        always the distributed executor path (budget 0), since callers
+        join/aggregate it at corpus scale."""
+        res = self._execute({"": node}, None, 0, need_scores=need_scores)
+        if isinstance(res, pd.DataFrame):       # no query term exists
+            return self._empty_result()
+        return res.select("doc_id", "score")
+
+    def _execute(self, plans: dict[str, P.Node], k: int | None, budget: int,
+                 need_scores: bool = True,
+                 after: tuple[float, int] | None = None,
+                 memo_keys: dict[str, str] | None = None):
+        """THE serving executor behind search(), search_after(), count(),
+        matches() and search_many(). `plans` maps query ids to planned,
+        deduplicated nodes; k=None scores (or, need_scores=False, merely
+        matches) exhaustively; `after` is a searchAfter cursor.
+
+        Match-all shapes are served from the docstats sidecar
+        (_matchall_docs). Every other query runs through _score_plans
+        over the postings of the UNION of the plans' terms, with
+        statistics and weights taken once for the batch (weight trees
+        memoized per `memo_keys` entry). Cost-based path choice
+        (IndexOrDocValuesQuery spirit): when the union Σdf fits `budget`
+        (0 disables), one shuffle-free collect — memoized per term set —
+        feeds the kernel driver-side, which for a small request skips a
+        job whose cost is ~90% scheduling floor. Otherwise the kernel
+        runs per partition in one mapInPandas stage. Result-identical
+        either way: same kernel, same concatenated global-doc-order
+        arrays (rows sorted by part inside _assemble_postings).
+
+        Returns a pandas frame (query_id, doc_id, score) when answered
+        driver-side — each query's rows contiguous and ranked when k is
+        set — or else a DataFrame of per-partition candidates with the
+        same columns, which the caller merges."""
+        docs_only: dict[str, DataFrame] = {}
+        kernel: dict[str, P.Node] = {}
+        for qid, node in plans.items():
+            ma = self._matchall_docs(node)
+            if ma is not None:
+                docs_only[qid] = ma
+            elif self._contains_matchall(node):
+                raise ValueError(
+                    "MatchAllDocsQuery mixed into this boolean shape is "
+                    "unsupported (only top-level, all-positives-matchall, "
+                    "or alongside other positive clauses after rewrite)")
+            else:
+                kernel[qid] = node
+        terms: set[tuple[str, str]] = set()
+        for n in kernel.values():
+            self._collect_terms(n, terms)
+        stats = self.reader.term_stats(sorted(terms)) if terms else {}
+        live = [t for t in terms if t in stats]
+        # validates every phrase's field, so no short-circuit
+        want_pos = any([self._check_positions(n) for n in kernel.values()])
+        if not live:
+            kernel = {}
+        sc = (self._scoring(kernel, stats, {f for f, _ in terms},
+                            memo_keys or {}) if kernel else None)
+        est = sum(df for df, _ in stats.values())
+        if not docs_only and (not kernel or 0 < est <= budget):
+            postings = (self._local_postings(live, want_pos, sc.block_size)
+                        if kernel else None)
+            if postings is None:
+                return _hits_frame([], [], [], [])
+            return _score_plans(kernel, postings, sc, k, need_scores, after)
+        cand = None
+        if kernel:
+            post, terms_key = self._candidate_postings(live)
+            cand = post.mapInPandas(
+                _kernel_task(kernel, sc, k, need_scores, after, want_pos,
+                             self._deleted, self._asm_epoch(), terms_key),
+                _HITS_SCHEMA)
+        for qid, m in docs_only.items():
+            m = m.select(F.lit(qid).alias("query_id"), "doc_id", "score")
+            cand = m if cand is None else cand.unionByName(m)
+        return cand
+
+    def _scoring(self, plans: dict[str, P.Node], stats: dict,
+                 fields: set[str], memo_keys: dict[str, str]) -> _Scoring:
+        weights: dict = {}
+        syn_w: dict = {}
+        phrase_w: dict = {}
+        blend_w: dict = {}
+        for qid, n in plans.items():
+            mk = memo_keys.get(qid)
+            wsp = self._weights_memo.get(mk) if mk is not None else None
+            if wsp is None:
+                wsp = self._weights(n, stats)
+                if mk is not None:
+                    self._weights_memo[mk] = wsp
+            w, s, p, bl = wsp
+            weights.update(w)
+            syn_w.update(s)
+            phrase_w.update(p)
+            blend_w.update(bl)
+        return _Scoring(
+            weights=weights, syn_weights=syn_w, phrase_weights=phrase_w,
+            blend_weights=blend_w,
+            avgdl=self._avgdl_map(fields),
+            sim=self.sim, field_sims=self.field_sims,
+            block_size=int(self.reader.manifest["config"].get("block_size", 128)))
+
+    def _terms_key(self, live, tag: str) -> str:
+        """Digest of (cache epoch incl. the deletes digest, tag, sorted
+        term set): the key of both per-term-set serving caches."""
+        h = hashlib.blake2b(digest_size=12)
+        h.update(self._asm_epoch().encode())
+        h.update(tag.encode())
+        for ft in sorted(live):
+            h.update(repr(ft).encode())
+        return h.hexdigest()
+
+    def _local_postings(self, live, want_pos: bool, block_size: int) -> dict | None:
+        """The local path's postings: one shuffle-free collect of the
+        bucket-pruned posting rows, assembled driver-side. Memoized per
+        (asm epoch incl. delete digest, want_pos, sorted term set) in a
+        bounded LRU, so a serving process answering recurring requests
+        pays the collect job once per term set and snapshot — the driver-
+        side twin of the workers' decoded-postings cache. None when no
+        posting rows exist."""
+        key = self._terms_key(live, f"|local|{bool(want_pos)}")
+        postings = self._local_rows_cache.get(key)
+        if postings is not None:
+            self._local_rows_cache.move_to_end(key)
+            return postings
+        pdf = self.reader.postings_for_terms(live).toPandas()
+        if not len(pdf):
+            return None
+        # assemble through the per-term cache (the driver runs the same
+        # _ASM_CACHE the executors use): earlier requests have usually
+        # decoded the hot terms already
+        postings = _assemble_postings_cached(
+            pdf, want_pos, self._deleted, block_size, self._asm_epoch())
+        self._local_rows_cache[key] = postings
+        while len(self._local_rows_cache) > 4:
+            self._local_rows_cache.popitem(last=False)
+        return postings
+
+    def _candidate_postings(self, live) -> tuple[DataFrame, str]:
+        """The distributed path's input: the term set's posting rows,
+        partitioned by part_id, and their term-set key. Cached postings
+        are already partitioned; the parquet path needs the explicit
+        fixed-width shuffle (see kernel_partitions), and the shuffled rows
+        stay persisted per term set — a serving process re-sees the same
+        query mixes, and re-shuffling an immutable snapshot per request is
+        pure waste (the IndexReader-stays-open role). Bounded LRU; evicted
+        entries unpersist."""
+        cached = self.reader.postings_cached
+        nparts = (self.reader.postings_partitions if cached
+                  else self.kernel_partitions)
+        key = self._terms_key(live, f"|{nparts}|")
+        if cached:
+            return self.reader.postings_for_terms(live), key
+        post = self._post_cache.get(key)
+        if post is not None:
+            self._post_cache.move_to_end(key)
+            return post, key
+        post = (self.reader.postings_for_terms(live)
+                .repartition(self.kernel_partitions, "part_id").persist())
+        self._post_cache[key] = post
+        while len(self._post_cache) > 4:
+            _, old = self._post_cache.popitem(last=False)
+            try:
+                old.unpersist()
+            except Exception:
+                pass
+        return post, key
+
+    def _matchall_docs(self, node: P.Node) -> DataFrame | None:
+        """Match-all shapes served from the docstats sidecar — no postings
+        touched. MatchAllDocsQuery: every live doc at constant score =
+        boost (search/MatchAllDocsQuery.java). A boolean whose positive
+        clauses are all match-all ('all docs except X'): every live doc
+        minus the union of the negative clauses' matches, scored at the
+        summed match-all boosts (FILTER scoreless). None for any other
+        shape."""
+        negs: list[P.Node] = []
         if isinstance(node, P.MatchAllNode):
-            # MatchAllDocsQuery: every live doc at constant score = boost
-            # (search/MatchAllDocsQuery.java); served from the docstats
-            # sidecar — no postings touched
-            out = self.reader.docstats().select(
-                "doc_id", F.lit(float(node.boost)).cast("float").alias("score"))
-            return self._mask_deleted(out)
-        if isinstance(node, P.BooleanNode):
+            score = float(node.boost)
+        elif isinstance(node, P.BooleanNode):
             pos = [c for c in node.clauses
                    if c.occur in (P.Occur.MUST, P.Occur.SHOULD,
                                   P.Occur.FILTER)]
-            if pos and all(isinstance(c.node, P.MatchAllNode) for c in pos):
-                # 'all docs except X' (MatchAllDocsQuery + MUST_NOT):
-                # every live doc minus the union of negative matches,
-                # scored at the summed matchall boosts (FILTER scoreless)
-                score = sum(float(c.node.boost) for c in pos
-                            if c.occur is not P.Occur.FILTER)
-                out = self.reader.docstats().select(
-                    "doc_id", F.lit(score).cast("float").alias("score"))
-                negs = [c.node for c in node.clauses
-                        if c.occur is P.Occur.MUST_NOT]
-                if negs:
-                    neg_node = negs[0] if len(negs) == 1 else P.BooleanNode(
-                        clauses=tuple(P.Clause(P.Occur.SHOULD, n)
-                                      for n in negs),
-                        minimum_should_match=1)
-                    neg_df = self._run_kernel(P.rewrite(neg_node), None,
-                                              need_scores=False)
-                    out = out.join(neg_df.select("doc_id"), "doc_id",
-                                   "left_anti")
-                return self._mask_deleted(out)
-        if self._contains_matchall(node):
-            raise ValueError(
-                "MatchAllDocsQuery mixed into this boolean shape is "
-                "unsupported (only top-level, all-positives-matchall, or "
-                "alongside other positive clauses after rewrite)")
-        terms: set[tuple[str, str]] = set()
-        self._collect_terms(node, terms)
-        if not terms:
-            return self._empty_result()
-        stats = self.reader.term_stats(sorted(terms))
-        live = [t for t in terms if t in stats]
-        if not live:
-            return self._empty_result()
-        weights, syn_weights, phrase_weights, blend_weights = self._weights(node, stats)
-        avgdl = self._avgdl_map({f for f, _ in terms})
-        sim = self.sim
-        field_sims = self.field_sims
-        kk = k
-        want_pos = self._check_positions(node)
-
-        post = self.reader.postings_for_terms(live)
-        deleted = self._deleted
-        self_block_size = int(self.reader.manifest["config"].get("block_size", 128))
-
-        # ---- cost-based local execution (IndexOrDocValuesQuery spirit):
-        # for SELECTIVE top-k queries (Σdf below the threshold) the whole
-        # candidate set is a handful of posting rows — collect them in one
-        # shuffle-free job and run the SAME kernel driver-side, skipping
-        # the applyInPandas repartition + window stages (cuts ~2 of 3
-        # stages off single-query latency). Result-identical: the kernel
-        # is partition-agnostic and the concatenated arrays keep global
-        # doc order (rows sorted by part inside _assemble_postings).
-        est_postings = sum(df for df, _ in stats.values())
-        if (kk is not None and not phase1_only
-                and initial_floor == float("-inf")
-                and est_postings <= self.local_topk_max_postings):
-            ctx = self._local_ctx(node, stats, live, k=kk)
-            if ctx is None:
-                return self._empty_result()
-            if isinstance(node, P.TermNode) and after is None:
-                # block-max pruning keeps only top-k-competitive docs —
-                # valid for page 1 only; a searchAfter cursor needs the
-                # docs BELOW the floor, so paging evaluates exhaustively
-                docs, scores = score_term_topk_blockmax(node, ctx)
-            else:
-                docs, scores = eval_node(node, ctx, need_scores=need_scores)
-            if after is not None and docs.size:
-                a_s, a_d = np.float32(after[0]), np.int64(after[1])
-                keep = (scores < a_s) | ((scores == a_s) & (docs > a_d))
-                docs, scores = docs[keep], scores[keep]
-            docs, scores = topk_local(docs, scores, kk)
-            return self.reader.spark.createDataFrame(
-                [(int(d), float(s)) for d, s in zip(docs, scores)],
-                "doc_id long, score float")
-
-        asm_epoch = self._asm_epoch()
-
-        def run(pdf: pd.DataFrame) -> pd.DataFrame:
-            postings = _assemble_postings_cached(pdf, want_pos, deleted,
-                                                 self_block_size, asm_epoch)
-            ctx = EvalContext(postings=postings, weights=weights, syn_weights=syn_weights,
-                              avgdl=avgdl, sim=sim, k=kk or 10,
-                              phrase_weights=phrase_weights,
-                              field_sims=field_sims, block_size=self_block_size,
-                              score_memo={}, blend_weights=blend_weights)
-            if kk is not None and isinstance(node, P.TermNode) and after is None:
-                # see local path: pruning is admissible only without a
-                # paging cursor (pruned blocks hold the next pages)
-                docs, scores = score_term_topk_blockmax(
-                    node, ctx, phase1_only=phase1_only, initial_floor=initial_floor)
-            else:
-                docs, scores = eval_node(node, ctx, need_scores=need_scores)
-            if kk is not None:
-                if after is not None and docs.size:
-                    a_s, a_d = np.float32(after[0]), np.int64(after[1])
-                    keep = (scores < a_s) | ((scores == a_s) & (docs > a_d))
-                    docs, scores = docs[keep], scores[keep]
-                docs, scores = topk_local(docs, scores, kk)
-            return pd.DataFrame({"doc_id": docs.astype(np.int64),
-                                 "score": scores.astype(np.float32)})
-
-        def run_stream(batches):
-            # see search_many: fixed-width part_id repartition keeps the
-            # compute-bound kernel stage wide (AQE would byte-coalesce it)
-            chunks = [pdf for pdf in batches if len(pdf)]
-            if chunks:
-                yield run(pd.concat(chunks, ignore_index=True))
-
-        if not self.reader.postings_cached:
-            post = post.repartition(self.kernel_partitions, "part_id")
-        return post.mapInPandas(run_stream, "doc_id long, score float")
-
-    def _candidates(self, node: P.Node, k: int, after: tuple[float, int] | None = None) -> DataFrame:
-        return self._run_kernel(node, k, need_scores=True, after=after)
-
-    def _matches(self, node: P.Node, need_scores: bool) -> DataFrame:
-        return self._run_kernel(node, None, need_scores=need_scores)
+            if not pos or not all(isinstance(c.node, P.MatchAllNode)
+                                  for c in pos):
+                return None
+            score = sum(float(c.node.boost) for c in pos
+                        if c.occur is not P.Occur.FILTER)
+            negs = [c.node for c in node.clauses
+                    if c.occur is P.Occur.MUST_NOT]
+        else:
+            return None
+        out = self.reader.docstats().select(
+            "doc_id", F.lit(score).cast("float").alias("score"))
+        if negs:
+            neg_node = negs[0] if len(negs) == 1 else P.BooleanNode(
+                clauses=tuple(P.Clause(P.Occur.SHOULD, n) for n in negs),
+                minimum_should_match=1)
+            neg_df = self._matches(P.rewrite(neg_node), need_scores=False)
+            out = out.join(neg_df.select("doc_id"), "doc_id", "left_anti")
+        return self._mask_deleted(out)
 
 
 class FilterCache:

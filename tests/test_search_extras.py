@@ -112,15 +112,6 @@ def test_search_many_with_matchall_and_phrase(spark, corpus_pdf, tmp_path_factor
         assert set(by_q[qid]) == want, qid
 
 
-def test_two_pass_global_floor_result_identical(searcher):
-    """MaxScoreAccumulator analogue: the broadcast global floor must not
-    change results (admissible pruning), only skip work."""
-    for q in ["index", "writer", "license", "uid42sing"]:
-        a = [(r["doc_id"], r["score"]) for r in searcher.search(q, k=10).collect()]
-        b = [(r["doc_id"], r["score"]) for r in searcher.search(q, k=10, two_pass=True).collect()]
-        assert a == b, q
-
-
 def test_xxhash64_matches_spark(spark, reader):
     """Driver-side XXH64 is bit-exact vs the JVM over the whole term
     dictionary + adversarial strings (length boundaries, unicode)."""

@@ -119,6 +119,23 @@ def test_stale_digest_detected(spark, tmp_path_factory):
     assert got == _brute(vecs, q, 5)
 
 
+def test_bad_vector_graph_field_fails_before_writing(spark, tmp_path_factory):
+    """A vector_graph_fields entry that is not a carry column is rejected
+    at build entry, before any file (let alone the manifest) is written."""
+    from lucene_spark.index import IndexBuilder, IndexConfig
+
+    src = spark.createDataFrame([(1, "doc alpha", [0.5, 1.0])],
+                                "id long, text string, emb array<float>")
+    idx = str(tmp_path_factory.mktemp("vgbad") / "index")
+    cfg = IndexConfig(key_cols=("id",), content_col="text",
+                      analyzer="whitespace", partitions=1, num_buckets=2,
+                      carry_cols=("emb",), vector_graph_fields=("vec",))
+    with pytest.raises(ValueError, match="carry column"):
+        IndexBuilder(spark, cfg).build(src, idx, overwrite=True)
+    assert not os.path.exists(os.path.join(idx, "manifest.json"))
+    assert not os.path.exists(idx)
+
+
 def test_pack_unpack_roundtrip_search_identical():
     from lucene_spark.index.vecgraph import _pack_graph, _unpack_graph
     from lucene_spark.pipeline.ann import (_normalize_rows, build_hnsw,
