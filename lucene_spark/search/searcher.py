@@ -35,7 +35,7 @@ import hashlib
 import math
 import os
 from collections import OrderedDict
-from dataclasses import dataclass, replace
+from dataclasses import replace
 
 import numpy as np
 import pandas as pd
@@ -495,21 +495,6 @@ _HITS_SCHEMA = "query_id string, doc_id long, score float"
 _BATCH_SCHEMA = "query_id string, doc_id long, score float, rank int"
 
 
-@dataclass
-class _Scoring:
-    """Driver-computed scoring inputs shared by every query of one
-    executor call (Similarity.scorer creation). Picklable: it rides the
-    mapInPandas closure to the workers."""
-    weights: dict
-    syn_weights: dict
-    phrase_weights: dict
-    blend_weights: dict
-    avgdl: dict
-    sim: object
-    field_sims: dict
-    block_size: int
-
-
 def _hits_frame(qids: list, counts: list, docs: list, scores: list) -> pd.DataFrame:
     """(query_id, doc_id, score) from per-query arrays — ONE frame via
     np.repeat over the hit counts (a pd.DataFrame per query would cost
@@ -525,7 +510,7 @@ def _hits_frame(qids: list, counts: list, docs: list, scores: list) -> pd.DataFr
         "score": np.concatenate(scores).astype(np.float32)})
 
 
-def _score_plans(plans: dict[str, P.Node], postings: dict, sc: _Scoring,
+def _score_plans(plans: dict[str, P.Node], postings: dict, base: EvalContext,
                  k: int | None, need_scores: bool = True,
                  after: tuple[float, int] | None = None) -> pd.DataFrame:
     """The one scoring dispatch of the serving path: it runs on the
@@ -536,12 +521,9 @@ def _score_plans(plans: dict[str, P.Node], postings: dict, sc: _Scoring,
     else evaluates exhaustively; then the searchAfter cursor filter
     (strictly after (score, doc_id)) and, when k is set, the partition-
     local top-k. Each query's rows come out contiguous, ranked (score
-    desc, doc_id asc) when k is set."""
-    ctx = EvalContext(postings=postings, weights=sc.weights,
-                      syn_weights=sc.syn_weights, avgdl=sc.avgdl, sim=sc.sim,
-                      k=k or 10, phrase_weights=sc.phrase_weights,
-                      field_sims=sc.field_sims, block_size=sc.block_size,
-                      score_memo={}, blend_weights=sc.blend_weights)
+    desc, doc_id asc) when k is set. `base` carries the request's
+    driver-computed weights (see IndexSearcher._scoring)."""
+    ctx = replace(base, postings=postings, score_memo={})
     qids: list[str] = []
     counts: list[int] = []
     doc_parts: list[np.ndarray] = []
@@ -565,7 +547,7 @@ def _score_plans(plans: dict[str, P.Node], postings: dict, sc: _Scoring,
     return _hits_frame(qids, counts, doc_parts, score_parts)
 
 
-def _kernel_task(plans: dict[str, P.Node], sc: _Scoring, k: int | None,
+def _kernel_task(plans: dict[str, P.Node], base: EvalContext, k: int | None,
                  need_scores: bool, after: tuple[float, int] | None,
                  want_pos: bool, deleted: DeleteSet, epoch: str,
                  terms_key: str):
@@ -589,7 +571,7 @@ def _kernel_task(plans: dict[str, P.Node], sc: _Scoring, k: int | None,
 
         tc = TaskContext.get()
         key = (None if tc is None else
-               (epoch, terms_key, want_pos, sc.block_size, tc.partitionId()))
+               (epoch, terms_key, want_pos, base.block_size, tc.partitionId()))
         cached = _parts_cache_get(key) if key is not None else None
         if cached is not None:
             for _ in batches:
@@ -599,7 +581,7 @@ def _kernel_task(plans: dict[str, P.Node], sc: _Scoring, k: int | None,
                 # the task and lose this very cache
                 pass
             if cached:
-                yield _score_plans(plans, cached, sc, k, need_scores, after)
+                yield _score_plans(plans, cached, base, k, need_scores, after)
             return
         chunks = [pdf for pdf in batches if len(pdf)]
         if not chunks:
@@ -608,11 +590,11 @@ def _kernel_task(plans: dict[str, P.Node], sc: _Scoring, k: int | None,
             return
         postings = _assemble_postings_cached(
             pd.concat(chunks, ignore_index=True), want_pos, deleted,
-            sc.block_size, epoch)
+            base.block_size, epoch)
         if key is not None:
             _parts_cache_put(
                 key, {ft: _tp_owned(tp) for ft, tp in postings.items()})
-        yield _score_plans(plans, postings, sc, k, need_scores, after)
+        yield _score_plans(plans, postings, base, k, need_scores, after)
 
     return run_stream
 
@@ -1896,20 +1878,20 @@ class IndexSearcher:
         want_pos = any([self._check_positions(n) for n in kernel.values()])
         if not live:
             kernel = {}
-        sc = (self._scoring(kernel, stats, {f for f, _ in terms},
-                            memo_keys or {}) if kernel else None)
+        base = (self._scoring(kernel, stats, {f for f, _ in terms}, k,
+                              memo_keys or {}) if kernel else None)
         est = sum(df for df, _ in stats.values())
         if not docs_only and (not kernel or 0 < est <= budget):
-            postings = (self._local_postings(live, want_pos, sc.block_size)
+            postings = (self._local_postings(live, want_pos, base.block_size)
                         if kernel else None)
             if postings is None:
                 return _hits_frame([], [], [], [])
-            return _score_plans(kernel, postings, sc, k, need_scores, after)
+            return _score_plans(kernel, postings, base, k, need_scores, after)
         cand = None
         if kernel:
             post, terms_key = self._candidate_postings(live)
             cand = post.mapInPandas(
-                _kernel_task(kernel, sc, k, need_scores, after, want_pos,
+                _kernel_task(kernel, base, k, need_scores, after, want_pos,
                              self._deleted, self._asm_epoch(), terms_key),
                 _HITS_SCHEMA)
         for qid, m in docs_only.items():
@@ -1918,7 +1900,11 @@ class IndexSearcher:
         return cand
 
     def _scoring(self, plans: dict[str, P.Node], stats: dict,
-                 fields: set[str], memo_keys: dict[str, str]) -> _Scoring:
+                 fields: set[str], k: int | None,
+                 memo_keys: dict[str, str]) -> EvalContext:
+        """The request's scoring context minus its postings: weights
+        precomputed driver-side (Similarity.scorer creation), merged over
+        all plans. Picklable — it rides the mapInPandas closure."""
         weights: dict = {}
         syn_w: dict = {}
         phrase_w: dict = {}
@@ -1935,12 +1921,12 @@ class IndexSearcher:
             syn_w.update(s)
             phrase_w.update(p)
             blend_w.update(bl)
-        return _Scoring(
-            weights=weights, syn_weights=syn_w, phrase_weights=phrase_w,
-            blend_weights=blend_w,
-            avgdl=self._avgdl_map(fields),
-            sim=self.sim, field_sims=self.field_sims,
-            block_size=int(self.reader.manifest["config"].get("block_size", 128)))
+        return EvalContext(
+            postings={}, weights=weights, syn_weights=syn_w,
+            avgdl=self._avgdl_map(fields), sim=self.sim, k=k or 10,
+            phrase_weights=phrase_w, field_sims=self.field_sims,
+            block_size=int(self.reader.manifest["config"].get("block_size", 128)),
+            blend_weights=blend_w)
 
     def _terms_key(self, live, tag: str) -> str:
         """Digest of (cache epoch incl. the deletes digest, tag, sorted

@@ -2,8 +2,6 @@
 float32 BM25 scores, engine vs the independent pure-Python oracle, over the
 reference-shaped query set (corpus.make_query_set)."""
 
-import math
-
 import numpy as np
 import pytest
 
@@ -22,13 +20,9 @@ def run_oracle(searcher, oracle, q, k):
 
 @pytest.mark.parametrize("qid,query,k", make_query_set())
 def test_topk_parity(searcher, oracle, qid, query, k):
-    got = run_engine(searcher, query, k)
-    want = run_oracle(searcher, oracle, query, k)
-    assert [d for d, _ in got] == [d for d, _ in want], (
-        f"q{qid} {query!r}: docs {got} != {want}")
-    for (d1, s1), (d2, s2) in zip(got, want):
-        assert math.isclose(s1, s2, rel_tol=1e-6, abs_tol=1e-6), (
-            f"q{qid} {query!r}: score {s1} != {s2} for doc {d1}")
+    """search() on the default (driver-side local) path."""
+    _assert_float32_equal(f"q{qid} {query!r}", run_engine(searcher, query, k),
+                          run_oracle(searcher, oracle, query, k))
 
 
 @pytest.mark.parametrize("query", ["index", "license", "index AND writer",
@@ -160,11 +154,11 @@ def test_blockmax_pruning_misaligned_tail_blocks():
 
 
 # ---- every serving path against the oracle, float32-exact -------------
-# The same 25 query strings run through search() and search_many() on the
-# driver-side (local) and the distributed executor, and through
-# search_many() on a searcher with tombstones. Expected: the oracle's
-# exhaustive scoring, minus deleted docs, ranked (score desc, doc_id asc);
-# scores must be equal as float32, not merely close.
+# The 25 query strings of test_topk_parity also run through search() on
+# the distributed executor, through one search_many() call on each path,
+# and through search_many() on a searcher with tombstones. Expected: the
+# oracle's exhaustive scoring, minus deleted docs, ranked (score desc,
+# doc_id asc); scores must be equal as float32, not merely close.
 
 _QUERIES = make_query_set()
 _BATCH_K = 10
@@ -202,12 +196,10 @@ def dist_searcher(reader):
 
 
 @pytest.mark.parametrize("qid,query,k", _QUERIES)
-def test_topk_parity_float32_local_and_distributed(searcher, dist_searcher,
-                                                   oracle, qid, query, k):
-    want = _oracle_ranked(oracle, searcher._plan(query), k)
-    for label, s in (("local", searcher), ("distributed", dist_searcher)):
-        _assert_float32_equal(f"search() {label} q{qid} {query!r}",
-                              run_engine(s, query, k), want)
+def test_topk_parity_distributed(dist_searcher, oracle, qid, query, k):
+    _assert_float32_equal(f"search() distributed q{qid} {query!r}",
+                          run_engine(dist_searcher, query, k),
+                          run_oracle(dist_searcher, oracle, query, k))
 
 
 def _batch_rows(s, queries, k):
