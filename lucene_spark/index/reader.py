@@ -7,11 +7,14 @@ TermStatistics — search/CollectionStatistics.java:51-55,
 TermStatistics.java:54-56) are tiny driver-side collects against the
 sorted term dictionary; the postings scan is always bucket-pruned
 (partition pruning on the term-hash bucket) plus Parquet row-group
-pruning on the sorted `term` column.
+pruning on the sorted `term` column — as a Spark DataFrame
+(postings_for_terms) or, for the searcher's local path, as a driver-side
+pyarrow read that starts no Spark job (postings_frame).
 """
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 
@@ -49,7 +52,6 @@ class IndexReader:
         self.key_cols: list[str] = cfg["key_cols"]
         self.carry_cols: list[str] = cfg.get("carry_cols", [])
         self.num_buckets: int = cfg["num_buckets"]
-        self.layout: int = int(self.manifest.get("layout", 1))
         self.doc_count: int = int(self.manifest["doc_count"])
         self.sum_doclen: int = int(self.manifest["sum_doclen"])
         # ---- per-field schema (manifest v3); v2 manifests synthesize a
@@ -133,24 +135,7 @@ class IndexReader:
         return tuple(self.manifest["config"].get("sort_by", ()))
 
     # ---- DataFrames ------------------------------------------------------
-    def _raw(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.index_dir, "raw"))
-
     def postings(self) -> DataFrame:
-        if self.layout >= 2:
-            # raw/ has no bucket column (it only exists in the derived
-            # postings/ dir) — compute it on the fly, matching the build-
-            # time pmod(xxhash64(term), num_buckets) exactly
-            cols = ["field", "term", "part_id", "slice", "local_df", "local_cf",
-                    "doc_blob", "tf_blob", "dl_blob", "pos_blob", "pay_blob",
-                    "block_last", "block_max_tf", "block_min_dl"]
-            raw = self._raw()
-            cols = [c for c in cols if c in raw.columns]  # pre-payload indexes
-            return (
-                raw.filter(F.col("kind") == "posting").select(*cols)
-                .withColumn("bucket", F.pmod(F.xxhash64("term"),
-                                             F.lit(self.num_buckets)).cast("int"))
-            )
         return self._with_field(
             self.spark.read.parquet(_derived_path(self.index_dir,
                                                   self.manifest, "postings")))
@@ -169,12 +154,6 @@ class IndexReader:
                                                   self.manifest, "termdict")))
 
     def docstats(self) -> DataFrame:
-        if self.layout >= 2:
-            raw = self._raw()
-            cols = [*self.key_cols, *self.carry_cols, "doc_id", "doclen",
-                    *(["field_lens"] if "field_lens" in raw.columns else []),
-                    "sha256"]
-            return raw.filter(F.col("kind") == "docstat").select(*cols)
         return self.spark.read.parquet(
             _derived_path(self.index_dir, self.manifest, "docstats"))
 
@@ -547,6 +526,65 @@ class IndexReader:
             c = (col("field") == fld) & col("term").isin(sorted(ts))
             cond = c if cond is None else (cond | c)
         return post.filter(cond)
+
+    def postings_frame(self, terms, part_id: int | None = None) -> pd.DataFrame:
+        """The rows of postings_for_terms(terms).toPandas() (optionally
+        only partition `part_id`'s), read on the driver with pyarrow — no
+        Spark job. The read is the same bucket-pruned scan: hive partition
+        pruning on bucket=B, then the (field, term) filter, which prunes
+        row groups on the sorted term column. The snapshot's files are
+        immutable; `_`/`.`-prefixed entries (_SUCCESS, .crc, _temporary)
+        are skipped, and every file of a bucket is read (stream appends
+        leave several)."""
+        import pyarrow.dataset as ds
+
+        dset = ds.dataset(_derived_path(self.index_dir, self.manifest,
+                                        "postings"),
+                          format="parquet", partitioning="hive")
+        has_field = "field" in dset.schema.names
+        by_field: dict[str, list[str]] = {}
+        for f, t in sorted(set(self._norm_terms(terms))):
+            if has_field or f == self.default_field:
+                by_field.setdefault(f, []).append(t)
+        if not by_field:
+            table = dset.schema.empty_table()
+        else:
+            names = sorted({t for ts in by_field.values() for t in ts})
+            buckets = sorted(set(self.buckets_of(names).values()))
+            frags = [self._term_row_groups(f, names) for f in
+                     dset.get_fragments(ds.field("bucket").isin(buckets))]
+            cond = ds.field("term").isin(names)
+            if has_field:
+                fcond = None
+                for fld, ts in by_field.items():
+                    c = ds.field("field") == fld
+                    if len(by_field) > 1:
+                        c = c & ds.field("term").isin(ts)
+                    fcond = c if fcond is None else (fcond | c)
+                cond = cond & fcond
+            if part_id is not None:
+                cond = cond & (ds.field("part_id") == part_id)
+            table = ds.FileSystemDataset(
+                frags, dset.schema, dset.format, dset.filesystem,
+            ).to_table(filter=cond)
+        pdf = table.to_pandas()
+        if not has_field:
+            pdf["field"] = self.default_field
+        return pdf
+
+    @staticmethod
+    def _term_row_groups(frag, names: list[str]):
+        """`frag` narrowed to the row groups whose term [min, max] holds
+        one of `names` (sorted): the row-group pruning the term-sorted
+        bucket files afford. pyarrow's own statistics pruning skips isin
+        filters; row groups without term statistics are kept."""
+        keep = []
+        for rg in frag.row_groups:
+            st = rg.statistics.get("term")
+            i = bisect.bisect_left(names, st["min"]) if st else 0
+            if not st or (i < len(names) and names[i] <= st["max"]):
+                keep.append(rg.id)
+        return frag.subset(row_group_ids=keep)
 
     def buckets_of(self, terms: list[str]) -> dict[str, int]:
         """term -> bucket, matching F.pmod(F.xxhash64(term), num_buckets)

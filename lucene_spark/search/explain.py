@@ -6,9 +6,9 @@ the explanation tree must re-derive the EXACT hit score.
 
 Implementation: driver-side recursive walk of the plan tree; per-term
 (tf, doclen) for the target doc are decoded from the bucket-pruned
-postings rows of the doc's own partition (a few rows collected — the
-doc_id's high bits name the partition, so the scan is partition- and
-bucket-pruned). All arithmetic reuses the exact float32 kernels in
+postings rows of the doc's own partition (a few rows read on the driver
+— the doc_id's high bits name the partition, so the read is partition-
+and bucket-pruned). All arithmetic reuses the exact float32 kernels in
 search/similarity.py, so `explanation["value"] == hit.score` bit-for-bit.
 """
 
@@ -21,19 +21,12 @@ from lucene_spark.search import plan as P
 
 
 def _doc_postings(searcher, terms: list[tuple[str, str]], doc_id: int) -> dict[tuple[str, str], tuple[int, int, np.ndarray | None]]:
-    """(field, term) -> (tf, doclen, positions|None) for one doc; pruned collect."""
-    from pyspark.sql import functions as F
-
-    reader = searcher.reader
-    part = doc_id >> 40
-    rows = (
-        reader.postings_for_terms(terms)
-        .filter(F.col("part_id") == part)
-        .collect()
-    )
+    """(field, term) -> (tf, doclen, positions|None) for one doc, from the
+    pruned driver-side read of the doc's own partition (no Spark job)."""
+    rows = searcher.reader.postings_frame(terms, part_id=doc_id >> 40)
     out: dict[tuple[str, str], tuple[int, int, np.ndarray | None]] = {}
     by_term: dict[tuple[str, str], list] = {}
-    for r in rows:
+    for r in rows.to_dict("records"):
         by_term.setdefault((r["field"], r["term"]), []).append(r)
     for term, rs in by_term.items():
         rs.sort(key=lambda r: r["slice"])

@@ -113,16 +113,21 @@ class DeleteSet:
             n += sum(c.nbytes for c in self.containers.values())
         return n
 
+    def sorted_ids(self) -> np.ndarray:
+        """Every deleted id as one sorted int64 array (containers
+        expanded)."""
+        if self.containers is None:
+            return self.ids
+        flat = []
+        for key in sorted(self.containers):
+            c = self.containers[key]
+            lows = (np.flatnonzero(np.unpackbits(c, bitorder="little"))
+                    if c.dtype == np.uint8 else c.astype(np.int64))
+            flat.append((key << 16) | lows)
+        return np.sort(np.concatenate(flat + [self.ids]))
+
     def __getitem__(self, i):
-        if self.containers is not None:
-            flat = []
-            for key in sorted(self.containers):
-                c = self.containers[key]
-                lows = (np.flatnonzero(np.unpackbits(c, bitorder="little"))
-                        if c.dtype == np.uint8 else c.astype(np.int64))
-                flat.append((key << 16) | lows)
-            return np.sort(np.concatenate(flat + [self.ids]))[i]
-        return self.ids[i]
+        return self.sorted_ids()[i]
 
     def dead_mask(self, docs: np.ndarray) -> np.ndarray | None:
         """Boolean array marking tombstoned entries of `docs` (sorted or
@@ -651,14 +656,14 @@ class IndexSearcher:
             str(man.get("build_seconds", "")),
         ])
         # cost-based local top-k execution threshold (Σdf of query terms):
-        # below it, the candidate posting rows are collected and the SAME
-        # kernel runs driver-side — no shuffle, no window stage. 0
-        # disables. 2M postings ≈ tens of MB of blobs — trivial for the
-        # driver, and the numpy kernel clears it in milliseconds; truly
-        # hot terms (df ≫ millions at 100 TB) stay distributed.
+        # below it, the driver reads the candidate posting rows itself and
+        # runs the SAME kernel — no Spark job at all. 0 disables. 2M
+        # postings ≈ tens of MB of blobs — trivial for the driver, and the
+        # numpy kernel clears it in milliseconds; truly hot terms (df ≫
+        # millions at 100 TB) stay distributed.
         self.local_topk_max_postings: int = 2_000_000
         # search_many's local-path gate on the batch's UNION Σdf: higher
-        # than the single-query budget because one collect+assembly is
+        # than the single-query budget because one read+assembly is
         # amortized across the whole batch (a 25-query batch shares its
         # hot terms), while big serving batches (the 12k-instance scaling
         # runs) blow far past it and stay distributed.
@@ -712,11 +717,13 @@ class IndexSearcher:
 
         `doc_ids` is an iterable of ints (small sets) OR a DataFrame with
         a `doc_id` column (the scale path). The DataFrame form never
-        materializes the raw id list driver-side past the collect cap:
-        above `max_collected_deletes` the set is folded into a packed
-        bitmap built DISTRIBUTEDLY (per-chunk bitwise-OR groupBy, ≤1 MiB
-        per chunk row), so driver memory is bounded by maxdoc/8 bytes —
-        the Lucene livedocs bound — not by the delete count."""
+        materializes the raw id list driver-side: its ids are folded
+        DISTRIBUTEDLY into roaring-style containers
+        (_build_delete_containers), which deduplicate on their own, so
+        driver memory is bounded by maxdoc/8 bytes — the Lucene livedocs
+        bound — not by the delete count. The distinct delete count comes
+        from the containers; at or under `max_collected_deletes` they are
+        expanded into the sorted-ids form."""
         s = IndexSearcher(self.reader)
         s.sim = self.sim
         s.field_sims = self.field_sims
@@ -726,24 +733,26 @@ class IndexSearcher:
         s.kernel_partitions = self.kernel_partitions
         s.max_collected_deletes = self.max_collected_deletes
         if isinstance(doc_ids, DataFrame):
-            dels_df = doc_ids.select(F.col("doc_id").cast("long")).distinct()
+            # no distinct(): the containers deduplicate, and the left-anti
+            # join of _mask_deleted ignores duplicate ids
+            dels_df = doc_ids.select(F.col("doc_id").cast("long"))
             if self._deleted_df is not None:
-                dels_df = dels_df.unionByName(self._deleted_df).distinct()
-            if self._deleted_df is None and self._deleted.ids.size:
+                dels_df = dels_df.unionByName(self._deleted_df)
+            elif self._deleted.ids.size:
                 # prior list-based ids must fold into the DataFrame form
                 # too — _mask_deleted prefers it once it exists
                 prior = self.reader.spark.createDataFrame(
                     [(int(d),) for d in self._deleted.ids], "doc_id long")
-                dels_df = dels_df.unionByName(prior).distinct()
-            n = int(dels_df.agg(F.count("*").alias("n")).first()["n"])
+                dels_df = dels_df.unionByName(prior)
+            containers = self._build_delete_containers(dels_df)
+            n = sum(int(c.size) if c.dtype == np.uint16
+                    else int(np.unpackbits(c).sum())
+                    for c in containers.values())
             if n <= self.max_collected_deletes:
-                ids = np.sort(np.array(
-                    [r["doc_id"] for r in dels_df.collect()], dtype=np.int64))
+                ids = DeleteSet(containers=containers, count=n).sorted_ids()
                 s._deleted = DeleteSet(ids=np.unique(np.concatenate(
-                    [self._deleted.ids, ids])) if self._deleted.ids.size
-                    else ids)
+                    [self._deleted.ids, ids])))
             else:
-                containers = self._build_delete_containers(dels_df)
                 ids = self._deleted.ids      # prior collected ids still mask
                 s._deleted = DeleteSet(ids=ids, containers=containers,
                                        count=n)
@@ -895,9 +904,9 @@ class IndexSearcher:
         term-stats lookup and one postings read for the UNION of all
         query terms, every query evaluated by the same vectorized kernel.
         When the union Σdf fits `local_batch_max_postings` the whole
-        batch is answered driver-side from one shuffle-free collect
-        (memoized per term set); otherwise the kernel runs per partition
-        in one mapInPandas stage and one windowed top-k merges the
+        batch is answered driver-side from one pyarrow read of the posting
+        files (memoized per term set), with no Spark job; otherwise the
+        kernel runs per partition in one mapInPandas stage and one windowed top-k merges the
         candidates. Queries with no matching terms simply produce no
         rows.
 
@@ -1845,10 +1854,11 @@ class IndexSearcher:
         statistics and weights taken once for the batch (weight trees
         memoized per `memo_keys` entry). Cost-based path choice
         (IndexOrDocValuesQuery spirit): when the union Σdf fits `budget`
-        (0 disables), one shuffle-free collect — memoized per term set —
-        feeds the kernel driver-side, which for a small request skips a
-        job whose cost is ~90% scheduling floor. Otherwise the kernel
-        runs per partition in one mapInPandas stage. Result-identical
+        (0 disables), the driver reads the term set's posting rows
+        straight from the Parquet files (IndexReader.postings_frame,
+        memoized per term set) and runs the kernel itself, so a small
+        request starts no Spark job. Otherwise the kernel runs per
+        partition in one mapInPandas stage. Result-identical
         either way: same kernel, same concatenated global-doc-order
         arrays (rows sorted by part inside _assemble_postings).
 
@@ -1939,19 +1949,19 @@ class IndexSearcher:
         return h.hexdigest()
 
     def _local_postings(self, live, want_pos: bool, block_size: int) -> dict | None:
-        """The local path's postings: one shuffle-free collect of the
-        bucket-pruned posting rows, assembled driver-side. Memoized per
-        (asm epoch incl. delete digest, want_pos, sorted term set) in a
-        bounded LRU, so a serving process answering recurring requests
-        pays the collect job once per term set and snapshot — the driver-
-        side twin of the workers' decoded-postings cache. None when no
-        posting rows exist."""
+        """The local path's postings: the bucket- and row-group-pruned
+        posting rows, read on the driver with pyarrow (no Spark job) and
+        assembled there. Memoized per (asm epoch incl. delete digest,
+        want_pos, sorted term set) in a bounded LRU, so a serving process
+        answering recurring requests reads and decodes once per term set
+        and snapshot — the driver-side twin of the workers' decoded-
+        postings cache. None when no posting rows exist."""
         key = self._terms_key(live, f"|local|{bool(want_pos)}")
         postings = self._local_rows_cache.get(key)
         if postings is not None:
             self._local_rows_cache.move_to_end(key)
             return postings
-        pdf = self.reader.postings_for_terms(live).toPandas()
+        pdf = self.reader.postings_frame(live)
         if not len(pdf):
             return None
         # assemble through the per-term cache (the driver runs the same

@@ -31,6 +31,13 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+def stable(plan: str) -> str:
+    """`plan` with the per-session ids Spark prints (expression ids such
+    as #215 and #215L, exchange plan_id=N) normalised, so a rerun over
+    unchanged plans writes an unchanged report."""
+    return re.sub(r"plan_id=\d+", "plan_id=N", re.sub(r"#\d+", "#N", plan))
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     import __spark_entry__ as gate
@@ -771,7 +778,7 @@ def main() -> None:
             lines.append(f"| {name} | {prop} | {'PASS' if ok else 'FAIL'} |")
     lines.append("")
     for name, p, _ in sections:
-        lines.append(f"## {name}\n\n```\n{p.strip()}\n```\n")
+        lines.append(f"## {name}\n\n```\n{stable(p.strip())}\n```\n")
     os.makedirs("docs", exist_ok=True)
     with open("docs/PLANS.md", "w") as fh:
         fh.write("\n".join(lines))

@@ -70,7 +70,14 @@ def _write_report(report: dict) -> None:
                 merged = json.load(f)
         except Exception:
             merged = {}
-    merged.update(report)
+    for name, row in report.items():
+        # a gate whose outcome is unchanged keeps its stored row, timing
+        # included, so a rerun with every gate green rewrites nothing
+        old = merged.get(name)
+        if not (isinstance(old, dict) and
+                {k: v for k, v in old.items() if k != "sec"} ==
+                {k: v for k, v in row.items() if k != "sec"}):
+            merged[name] = row
     with open(REPORT_PATH, "w") as f:
         json.dump(merged, f, indent=1, sort_keys=True)
 

@@ -63,3 +63,22 @@ def oracle(spark, reader, corpus_pdf):
     for row in corpus_pdf.itertuples(index=False):
         ora.add(int(key.loc[(row.repo, row.path, row.commit)]), row.content)
     return ora
+
+
+@pytest.fixture(scope="session")
+def check_postings_frame():
+    """Checker: the driver-side pyarrow read IndexReader.postings_frame
+    returns exactly the rows and columns of the Spark read
+    postings_for_terms(terms).toPandas(). Returns the row count."""
+    import pandas as pd
+
+    keys = ["field", "term", "part_id", "slice"]
+
+    def check(reader, terms) -> int:
+        want = (reader.postings_for_terms(terms).toPandas()
+                .sort_values(keys, ignore_index=True))
+        got = reader.postings_frame(terms).sort_values(keys, ignore_index=True)
+        pd.testing.assert_frame_equal(got, want)
+        return len(got)
+
+    return check

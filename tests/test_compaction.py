@@ -24,7 +24,7 @@ def test_plan_compaction_policy():
     assert len(victims) == 5
 
 
-def test_compact_streaming_groups(spark, tmp_path):
+def test_compact_streaming_groups(spark, tmp_path, check_postings_frame):
     from lucene_spark.corpus import make_corpus
     from lucene_spark.index import IndexConfig, IndexReader
     from lucene_spark.index.compaction import compact
@@ -47,6 +47,13 @@ def test_compact_streaming_groups(spark, tmp_path):
 
     r = IndexReader(spark, idx_dir)
     before = IndexSearcher(r).search("index OR writer OR merge", k=20).collect()
+    # every micro-batch appended its own file to the buckets it touched;
+    # the driver-side postings read takes them all
+    post_dir = os.path.join(idx_dir, r.manifest["derived"]["postings"])
+    assert max(len([f for f in files if f.endswith(".parquet")])
+               for _, _, files in os.walk(post_dir)) > 1
+    probe = ["index", "writer", "merge", "nonexistentterm12345"]
+    assert check_postings_frame(r, probe) > 0
     n_groups_before = len([d for d in os.listdir(os.path.join(idx_dir, "raw"))
                            if d.startswith("group=")])
     assert n_groups_before >= 2
@@ -61,6 +68,7 @@ def test_compact_streaming_groups(spark, tmp_path):
 
     r2 = IndexReader(spark, idx_dir)
     assert r2.doc_count == 120
+    assert check_postings_frame(r2, probe) > 0
     after = IndexSearcher(r2).search("index OR writer OR merge", k=20).collect()
     assert [(x["doc_id"], x["score"]) for x in before] == \
            [(x["doc_id"], x["score"]) for x in after]
@@ -214,7 +222,8 @@ def test_versioned_derived_isolates_pinned_readers(spark, tmp_path):
         assert os.path.isdir(os.path.join(idx, "postings.g1"))
 
 
-def test_stream_appends_follow_compacted_generation(spark, tmp_path):
+def test_stream_appends_follow_compacted_generation(spark, tmp_path,
+                                                   check_postings_frame):
     """A compaction BETWEEN micro-batches advances the derived map; the
     next batch must append to the NEW generation, not the one being
     retired (stale-generation append = silent row loss after gc)."""
@@ -252,6 +261,7 @@ def test_stream_appends_follow_compacted_generation(spark, tmp_path):
     # the new batch's postings are PHYSICALLY in the current generation
     rows_now = spark.read.parquet(os.path.join(idx, cur)).count()
     assert rows_now > rows_after_compact, (rows_now, rows_after_compact)
+    assert check_postings_frame(r, ["index", "merge", "scan"]) > 0
     assert IndexSearcher(r).search("index OR merge OR scan", k=50).collect()
 
 

@@ -81,6 +81,72 @@ def test_hydrate_returns_keys(searcher):
         assert r["repo"] and r["path"] and r["doclen"] > 0
 
 
+def test_postings_frame_matches_spark_read(reader, check_postings_frame):
+    """The local path's driver-side pyarrow postings read returns the
+    same rows and columns as the bucket-pruned Spark read."""
+    assert check_postings_frame(reader, ["index", "writer", "license"]) > 0
+    assert check_postings_frame(
+        reader, [(reader.default_field, t) for t in ("merge", "scan")]) > 0
+    # several terms hashed into one bucket
+    terms = reader.termdict().select("term").limit(200).toPandas()["term"]
+    by_bucket: dict[int, list[str]] = {}
+    for t, b in reader.buckets_of(list(terms)).items():
+        by_bucket.setdefault(b, []).append(t)
+    shared = max(by_bucket.values(), key=len)[:4]
+    assert len(shared) >= 2
+    assert check_postings_frame(reader, shared) > 0
+    assert check_postings_frame(reader, ["nonexistentterm12345"]) == 0
+    assert check_postings_frame(reader, ["index", "nonexistentterm12345"]) > 0
+    assert check_postings_frame(reader, []) == 0
+    # one partition's rows (explain's read)
+    part = int(reader.postings_frame(["index"])["part_id"].iloc[0])
+    got = reader.postings_frame(["index", "writer"], part_id=part)
+    want = reader.postings_frame(["index", "writer"])
+    assert len(got) and (got["part_id"] == part).all()
+    assert len(got) == int((want["part_id"] == part).sum())
+
+
+def test_postings_frame_fieldless_postings(spark, reader, check_postings_frame,
+                                           tmp_path):
+    """Postings written before the multi-field layout have no `field`
+    column: both reads synthesize the default field."""
+    import json
+
+    import pyarrow.dataset as ds
+
+    from lucene_spark.index import IndexReader
+    from lucene_spark.index.layout import derived_path
+
+    table = ds.dataset(derived_path(reader.index_dir, reader.manifest,
+                                    "postings"), partitioning="hive").to_table()
+    # without Spark's schema metadata, which still lists `field`
+    table = table.drop_columns(["field"]).replace_schema_metadata(None)
+    ds.write_dataset(table, str(tmp_path / "postings"),
+                     format="parquet", partitioning=["bucket"],
+                     partitioning_flavor="hive")
+    manifest = {k: v for k, v in reader.manifest.items() if k != "derived"}
+    (tmp_path / "manifest.json").write_text(json.dumps(manifest))
+    old = IndexReader(spark, str(tmp_path))
+    assert check_postings_frame(old, ["index", "writer"]) > 0
+    assert check_postings_frame(old, [("elsewhere", "index")]) == 0
+
+
+def test_local_search_starts_no_spark_job(spark, searcher):
+    """A fresh query under the local Σdf budget is read and scored on the
+    driver: search(...).collect() starts no Spark job."""
+    searcher.search("index", k=1).collect()   # loads the resident dictionary
+    sc = spark.sparkContext
+    group = "test-local-search-no-job"
+    sc.setJobGroup(group, "fresh local search()")
+    try:
+        rows = searcher.search("apache AND licensed AND NOT zw1", k=5).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert rows
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def test_blockmax_pruning_misaligned_tail_blocks():
     """Regression: block metadata has FULL 128-doc blocks plus a short
     tail (and concatenated slices repeat that pattern), so the pruning
