@@ -33,9 +33,12 @@ def plan_of(df) -> str:
 
 def stable(plan: str) -> str:
     """`plan` with the per-session ids Spark prints (expression ids such
-    as #215 and #215L, exchange plan_id=N) normalised, so a rerun over
-    unchanged plans writes an unchanged report."""
-    return re.sub(r"plan_id=\d+", "plan_id=N", re.sub(r"#\d+", "#N", plan))
+    as #215 and #215L, exchange plan_id=N, RDD[N]) normalised, so a rerun
+    over unchanged plans writes an unchanged report."""
+    for pat, rep in ((r"#\d+", "#N"), (r"plan_id=\d+", "plan_id=N"),
+                     (r"RDD\[\d+\]", "RDD[N]")):
+        plan = re.sub(pat, rep, plan)
+    return plan
 
 
 def main() -> None:
