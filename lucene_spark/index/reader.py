@@ -553,15 +553,12 @@ class IndexReader:
             buckets = sorted(set(self.buckets_of(names).values()))
             frags = [self._term_row_groups(f, names) for f in
                      dset.get_fragments(ds.field("bucket").isin(buckets))]
-            cond = ds.field("term").isin(names)
-            if has_field:
-                fcond = None
-                for fld, ts in by_field.items():
-                    c = ds.field("field") == fld
-                    if len(by_field) > 1:
-                        c = c & ds.field("term").isin(ts)
-                    fcond = c if fcond is None else (fcond | c)
-                cond = cond & fcond
+            cond = None
+            for fld, ts in by_field.items():
+                c = ds.field("term").isin(ts)
+                if has_field:
+                    c = c & (ds.field("field") == fld)
+                cond = c if cond is None else (cond | c)
             if part_id is not None:
                 cond = cond & (ds.field("part_id") == part_id)
             table = ds.FileSystemDataset(

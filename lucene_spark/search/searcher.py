@@ -752,6 +752,9 @@ class IndexSearcher:
                 ids = DeleteSet(containers=containers, count=n).sorted_ids()
                 s._deleted = DeleteSet(ids=np.unique(np.concatenate(
                     [self._deleted.ids, ids])))
+                # _mask_deleted broadcasts a set this small: dedupe it
+                # (lazily) so duplicate input rows are not broadcast too
+                dels_df = dels_df.distinct()
             else:
                 ids = self._deleted.ids      # prior collected ids still mask
                 s._deleted = DeleteSet(ids=ids, containers=containers,
