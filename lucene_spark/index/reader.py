@@ -4,12 +4,12 @@ Role analogue: index/DirectoryReader.java + search/IndexSearcher.java's
 leafContexts: a composite, immutable view over the committed index
 (manifest.json = segments_N). Stats lookups (CollectionStatistics /
 TermStatistics — search/CollectionStatistics.java:51-55,
-TermStatistics.java:54-56) are tiny driver-side collects against the
-sorted term dictionary; the postings scan is always bucket-pruned
-(partition pruning on the term-hash bucket) plus Parquet row-group
-pruning on the sorted `term` column — as a Spark DataFrame
-(postings_for_terms) or, for the searcher's local path, as a driver-side
-pyarrow read that starts no Spark job (postings_frame).
+TermStatistics.java:54-56) are answered on the driver from the sorted
+term dictionary, read with pyarrow: no Spark job. The postings scan is
+always bucket-pruned (partition pruning on the term-hash bucket) plus
+Parquet row-group pruning on the sorted `term` column — as a Spark
+DataFrame (postings_for_terms) or, for the searcher's local path, as a
+driver-side pyarrow read that starts no Spark job (postings_frame).
 """
 
 from __future__ import annotations
@@ -17,9 +17,11 @@ from __future__ import annotations
 import bisect
 import json
 import os
+import threading
 
 import numpy as np
 import pandas as pd
+import pyarrow.dataset as ds
 
 from lucene_spark.index.layout import derived_path as _derived_path
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -71,6 +73,8 @@ class IndexReader:
                                  "sum_ttf": self.sum_doclen}}
         self._hot_postings: DataFrame | None = None
         self._hot_postings_parts: int | None = None
+        self._dict_arrays_cache: dict[str, tuple | None] = {}
+        self._dict_lock = threading.Lock()
 
     def cache_postings(self, num_partitions: int = 32) -> DataFrame:
         """Pin the postings frame in executor memory, pre-partitioned by
@@ -184,41 +188,43 @@ class IndexReader:
     # Lucene keeps the term index memory-resident per segment
     # (codecs/blocktree/BlockTreeTermsReader.java FST index;
     # FieldReader holds it for the reader's lifetime). Same here, cost-
-    # gated: a field whose term count fits the cap is collected ONCE into
-    # sorted driver arrays, after which every dictionary expansion
-    # (prefix/wildcard/regexp/range/fuzzy) and term-stats lookup is a
-    # driver-side searchsorted/regex/DP — zero Spark jobs per query.
-    # Measured on the serving bench: each expansion job costs 0.3-0.9 s
-    # of cold batch latency; the resident path is sub-millisecond. Over
-    # the cap (a 100 TB corpus vocabulary is 10⁸+ terms) everything
-    # falls back to the distributed scans below, unchanged.
+    # gated: a field whose term count fits the cap is read ONCE, with
+    # pyarrow and no Spark job, into sorted driver arrays; after that
+    # every dictionary expansion (prefix/wildcard/regexp/range/fuzzy)
+    # and term-stats lookup is a driver-side searchsorted/regex/DP.
+    # Over the cap (a 100 TB corpus vocabulary is 10⁸+ terms) term_stats
+    # probes the termdict files with row-group pruning and the
+    # expansions fall back to the distributed scans below.
     dict_cache_max_terms: int = 1_000_000
 
     def _dict_arrays(self, field: str | None):
         """(terms sorted asc, term char lengths, df, cf) numpy arrays for
         `field`, or None when the field's dictionary exceeds the cap.
-        One tiny count job decides; one toPandas loads; both once per
-        reader lifetime (the snapshot is immutable)."""
+        count_rows takes row-group metadata where `field` min == max, else
+        the `field` column; Arrow's binary sort is Spark's code-point
+        order. Once per field per reader, under a lock planning threads
+        share (the snapshot is immutable)."""
         f = field or self.default_field
-        cache = self.__dict__.setdefault("_dict_arrays_cache", {})
-        if f in cache:
+        with self._dict_lock:
+            cache = self._dict_arrays_cache
+            if f in cache:
+                return cache[f]
+            dset = ds.dataset(_derived_path(self.index_dir, self.manifest,
+                                            "termdict"), format="parquet")
+            # a field-less termdict holds the default field only (_with_field)
+            cond = (ds.field("field") == f if "field" in dset.schema.names
+                    else ds.scalar(f == self.default_field))
+            if dset.count_rows(filter=cond) > self.dict_cache_max_terms:
+                cache[f] = None
+                return None
+            pdf = (dset.to_table(columns=["term", "df", "cf"], filter=cond)
+                   .sort_by("term").to_pandas())
+            terms = pdf["term"].to_numpy(dtype=object)
+            lens = np.fromiter((len(t) for t in terms), dtype=np.int64,
+                               count=terms.size)
+            cache[f] = (terms, lens,
+                        pdf["df"].to_numpy(np.int64), pdf["cf"].to_numpy(np.int64))
             return cache[f]
-        counts = self.__dict__.get("_dict_field_counts")
-        if counts is None:
-            counts = {r["field"]: int(r["count"]) for r in
-                      self.termdict().groupBy("field").count().collect()}
-            self._dict_field_counts = counts
-        if counts.get(f, 0) > self.dict_cache_max_terms:
-            cache[f] = None
-            return None
-        pdf = (self._field_dict(f).select("term", "df", "cf")
-               .orderBy("term").toPandas())
-        terms = pdf["term"].to_numpy(dtype=object)
-        lens = np.fromiter((len(t) for t in terms), dtype=np.int64,
-                           count=terms.size)
-        cache[f] = (terms, lens,
-                    pdf["df"].to_numpy(np.int64), pdf["cf"].to_numpy(np.int64))
-        return cache[f]
 
     @staticmethod
     def _prefix_slice(terms: np.ndarray, prefix: str) -> slice:
@@ -285,15 +291,11 @@ class IndexReader:
                     if i < tms.size and tms[i] == t else None)
             todo = remain
         if todo:
-            fields = sorted({f for f, _ in todo})
-            names = sorted({t for _, t in todo})
-            rows = (
-                self.termdict()
-                .filter(F.col("field").isin(fields) & F.col("term").isin(names))
-                .select("field", "term", "df", "cf")
-                .collect()
-            )
-            found = {(r["field"], r["term"]): (int(r["df"]), int(r["cf"])) for r in rows}
+            # over-cap fields: probe the termdict files on the driver
+            # (written (field, term)-sorted, so term row groups prune)
+            pdf = self._pair_rows("termdict", todo)
+            found = {(f, t): (int(d), int(c)) for f, t, d, c in
+                     zip(pdf["field"], pdf["term"], pdf["df"], pdf["cf"])}
             for t in todo:
                 self._stats_cache[t] = found.get(t)
         return {t: self._stats_cache[t] for t in terms
@@ -530,16 +532,18 @@ class IndexReader:
     def postings_frame(self, terms, part_id: int | None = None) -> pd.DataFrame:
         """The rows of postings_for_terms(terms).toPandas() (optionally
         only partition `part_id`'s), read on the driver with pyarrow — no
-        Spark job. The read is the same bucket-pruned scan: hive partition
-        pruning on bucket=B, then the (field, term) filter, which prunes
-        row groups on the sorted term column. The snapshot's files are
-        immutable; `_`/`.`-prefixed entries (_SUCCESS, .crc, _temporary)
-        are skipped, and every file of a bucket is read (stream appends
-        leave several)."""
-        import pyarrow.dataset as ds
+        Spark job; the same bucket-pruned scan (see _pair_rows)."""
+        return self._pair_rows("postings", terms, part_id)
 
-        dset = ds.dataset(_derived_path(self.index_dir, self.manifest,
-                                        "postings"),
+    def _pair_rows(self, name: str, terms,
+                   part_id: int | None = None) -> pd.DataFrame:
+        """Rows of the `name` artifact (postings or termdict) holding the
+        (field, term) pairs `terms`, read with pyarrow on the driver:
+        postings pruned to the terms' hive bucket=B, row groups pruned on
+        the sorted `term` column, `_`/`.`-prefixed entries skipped, every
+        file read (stream appends leave several). A file set without a
+        `field` column holds the default field only."""
+        dset = ds.dataset(_derived_path(self.index_dir, self.manifest, name),
                           format="parquet", partitioning="hive")
         has_field = "field" in dset.schema.names
         by_field: dict[str, list[str]] = {}
@@ -550,9 +554,11 @@ class IndexReader:
             table = dset.schema.empty_table()
         else:
             names = sorted({t for ts in by_field.values() for t in ts})
-            buckets = sorted(set(self.buckets_of(names).values()))
-            frags = [self._term_row_groups(f, names) for f in
-                     dset.get_fragments(ds.field("bucket").isin(buckets))]
+            buckets = (ds.field("bucket").isin(
+                sorted(set(self.buckets_of(names).values())))
+                if name == "postings" else None)
+            frags = [self._term_row_groups(f, names)
+                     for f in dset.get_fragments(buckets)]
             cond = None
             for fld, ts in by_field.items():
                 c = ds.field("term").isin(ts)

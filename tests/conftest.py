@@ -82,3 +82,28 @@ def check_postings_frame():
         return len(got)
 
     return check
+
+
+@pytest.fixture(scope="session")
+def check_dict_arrays():
+    """Checker: the resident dictionary IndexReader._dict_arrays(field),
+    loaded with pyarrow, holds exactly the arrays of the Spark read
+    termdict().filter(field).orderBy("term").toPandas(), dtypes included.
+    Returns the term count."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    def check(reader, field) -> int:
+        pdf = (reader.termdict().filter(F.col("field") == field)
+               .orderBy("term").toPandas())
+        terms = pdf["term"].to_numpy()
+        want = (terms, np.array([len(t) for t in terms], dtype=np.int64),
+                pdf["df"].to_numpy(), pdf["cf"].to_numpy())
+        got = reader._dict_arrays(field)
+        assert [a.dtype for a in got] == [np.dtype(object)] + \
+            [np.dtype(np.int64)] * 3
+        for g, w in zip(got, want):
+            assert np.array_equal(g, w)
+        return len(terms)
+
+    return check

@@ -24,7 +24,8 @@ def test_plan_compaction_policy():
     assert len(victims) == 5
 
 
-def test_compact_streaming_groups(spark, tmp_path, check_postings_frame):
+def test_compact_streaming_groups(spark, tmp_path, check_postings_frame,
+                                  check_dict_arrays):
     from lucene_spark.corpus import make_corpus
     from lucene_spark.index import IndexConfig, IndexReader
     from lucene_spark.index.compaction import compact
@@ -54,6 +55,7 @@ def test_compact_streaming_groups(spark, tmp_path, check_postings_frame):
                for _, _, files in os.walk(post_dir)) > 1
     probe = ["index", "writer", "merge", "nonexistentterm12345"]
     assert check_postings_frame(r, probe) > 0
+    assert check_dict_arrays(r, r.default_field) > 0
     n_groups_before = len([d for d in os.listdir(os.path.join(idx_dir, "raw"))
                            if d.startswith("group=")])
     assert n_groups_before >= 2
@@ -69,6 +71,7 @@ def test_compact_streaming_groups(spark, tmp_path, check_postings_frame):
     r2 = IndexReader(spark, idx_dir)
     assert r2.doc_count == 120
     assert check_postings_frame(r2, probe) > 0
+    assert check_dict_arrays(r2, r2.default_field) > 0
     after = IndexSearcher(r2).search("index OR writer OR merge", k=20).collect()
     assert [(x["doc_id"], x["score"]) for x in before] == \
            [(x["doc_id"], x["score"]) for x in after]

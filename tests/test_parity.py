@@ -107,9 +107,9 @@ def test_postings_frame_matches_spark_read(reader, check_postings_frame):
 
 
 def test_postings_frame_fieldless_postings(spark, reader, check_postings_frame,
-                                           tmp_path):
-    """Postings written before the multi-field layout have no `field`
-    column: both reads synthesize the default field."""
+                                           check_dict_arrays, tmp_path):
+    """Postings and termdict written before the multi-field layout have
+    no `field` column: both reads of each synthesize the default field."""
     import json
 
     import pyarrow.dataset as ds
@@ -124,11 +124,20 @@ def test_postings_frame_fieldless_postings(spark, reader, check_postings_frame,
     ds.write_dataset(table, str(tmp_path / "postings"),
                      format="parquet", partitioning=["bucket"],
                      partitioning_flavor="hive")
+    table = ds.dataset(derived_path(reader.index_dir, reader.manifest,
+                                    "termdict")).to_table()
+    table = table.drop_columns(["field"]).replace_schema_metadata(None)
+    ds.write_dataset(table, str(tmp_path / "termdict"), format="parquet")
     manifest = {k: v for k, v in reader.manifest.items() if k != "derived"}
     (tmp_path / "manifest.json").write_text(json.dumps(manifest))
     old = IndexReader(spark, str(tmp_path))
     assert check_postings_frame(old, ["index", "writer"]) > 0
     assert check_postings_frame(old, [("elsewhere", "index")]) == 0
+    f = reader.default_field
+    assert check_dict_arrays(old, f) > 0
+    assert all(np.array_equal(a, b) for a, b in
+               zip(old._dict_arrays(f), reader._dict_arrays(f)))
+    assert check_dict_arrays(old, "elsewhere") == 0
 
 
 def test_local_search_starts_no_spark_job(spark, searcher):
@@ -145,6 +154,54 @@ def test_local_search_starts_no_spark_job(spark, searcher):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert rows
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_fresh_reader_starts_no_spark_job(spark, index_dir, monkeypatch):
+    """A freshly opened reader loads its resident dictionary with pyarrow:
+    its first search() and its first small search_many() start no Spark
+    job, and search_many's planning threads share one load per field."""
+    import os
+    import time
+
+    import pyarrow.dataset as ds
+
+    from lucene_spark.index import IndexReader
+    from lucene_spark.search import IndexSearcher
+
+    loads = []
+    open_dataset = ds.dataset
+
+    def counting_dataset(source, *args, **kwargs):
+        if os.path.basename(str(source)).startswith("termdict"):
+            loads.append(source)
+            time.sleep(0.05)    # widen the window for concurrent loads
+        return open_dataset(source, *args, **kwargs)
+
+    monkeypatch.setattr(ds, "dataset", counting_dataset)
+    # dictionary expansions run in the planning threads
+    queries = {f"q{i}": q for i, q in enumerate([
+        "ind*", "writer OR merg*", "apache AND licens*", "sc?n",
+        "index~1 AND NOT writer", "licen*", "merge~1 OR scan",
+        "(index OR wri*) AND merge"])}
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    for run in (lambda s: s.search("index OR writer", k=5),
+                lambda s: s.search_many(queries, k=5)):
+        loads.clear()
+        searcher = IndexSearcher(IndexReader(spark, index_dir))
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        group = "test-fresh-reader-no-job"
+        sc.setJobGroup(group, "first query of a fresh reader")
+        try:
+            rows = run(searcher).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert rows
+        assert list(tracker.getJobIdsForGroup(group)) == []
+        # planning threads carry no job group of their own
+        assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+        assert len(loads) == 1
 
 
 def test_blockmax_pruning_misaligned_tail_blocks():

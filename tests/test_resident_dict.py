@@ -39,6 +39,13 @@ def test_expansions_match_distributed(reader, dist_reader):
         assert call(reader) == call(dist_reader), name
 
 
+def test_dict_arrays_match_spark_load(reader, check_dict_arrays):
+    """The pyarrow-loaded resident dictionary equals the Spark read; an
+    absent field loads as empty arrays."""
+    assert check_dict_arrays(reader, reader.default_field) > 0
+    assert check_dict_arrays(reader, "no_such_field") == 0
+
+
 def test_term_stats_match_distributed(reader, dist_reader):
     terms = ["index", "merge", "zzz_absent", "the", "scan"]
     a = reader.term_stats(terms)
@@ -57,6 +64,22 @@ def test_resident_stats_cost_zero_jobs(reader, spark):
     reader.term_stats(["index", "merge", "nope_x"])
     after = tracker.getJobIdsForGroup(None)
     assert before == after
+
+
+def test_over_cap_term_stats_start_no_job(dist_reader, spark):
+    """Over the cap, term_stats probes the termdict files with pyarrow:
+    still no Spark job."""
+    sc = spark.sparkContext
+    group = "test-over-cap-term-stats"
+    sc.setJobGroup(group, "over-cap term_stats")
+    try:
+        stats = dist_reader.term_stats(["index", "merge", "nope_x"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    f = dist_reader.default_field
+    assert set(stats) == {(f, "index"), (f, "merge")}
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_regexp_alternation_matches_distributed(reader, dist_reader):
@@ -79,7 +102,8 @@ def test_prefix_successor_handles_max_codepoint():
     assert got == {"ab", "ab\U0010ffff", "ab\U0010ffffz", "abc"}
 
 
-def test_regexp_class_escapes_ascii_parity(spark, tmp_path_factory):
+def test_regexp_class_escapes_ascii_parity(spark, tmp_path_factory,
+                                          check_dict_arrays):
     """ADVICE r4 (medium): \\d/\\w/\\s/\\b are Unicode in Python re but
     ASCII in java.util.regex (rlike) — the resident fast path must agree
     with the distributed scan on non-ASCII terms."""
@@ -100,6 +124,8 @@ def test_regexp_class_escapes_ascii_parity(spark, tmp_path_factory):
     dist = IndexReader(spark, d)
     dist.dict_cache_max_terms = 0
     assert res._dict_arrays(None) is not None
+    # non-ASCII terms: Arrow's sort agrees with Spark's orderBy
+    assert check_dict_arrays(res, res.default_field) > 0
     assert dist._dict_arrays(None) is None
     for pat in [r"caf\w", r"caf\d", r"na\wve", r"nai\we", r"nai\de",
                 r"w\wrd", r"\w+", r"caf."]:

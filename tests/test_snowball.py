@@ -72,7 +72,10 @@ GOLDEN = [
 
 @pytest.mark.parametrize("lang,fn", GOLDEN, ids=[g[0] for g in GOLDEN])
 def test_snowball_golden_vocabulary(lang, fn):
-    z = zipfile.ZipFile(f"{REF_SNOWBALL}/{lang}.zip")
+    try:
+        z = zipfile.ZipFile(f"{REF_SNOWBALL}/{lang}.zip")
+    except OSError:
+        pytest.skip("reference golden data not available")
     voc = z.read("voc.txt").decode("utf-8").split()
     out = z.read("output.txt").decode("utf-8").split()
     assert len(voc) == len(out)
